@@ -351,7 +351,11 @@ def main() -> None:
     ap.add_argument("--sf-dir", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--scaling", action="store_true")
-    ap.add_argument("--replicate", type=int, default=None)
+    ap.add_argument(
+        "--replicate", type=int, default=None,
+        help="corpus replication factor (default 1; with --scaling 8, "
+        "or 16 with --scaling --funnel, the recorded funnel protocol)",
+    )
     ap.add_argument("--n-small", type=int, default=8)
     ap.add_argument("--n-large", type=int, default=32)
     ap.add_argument("--fast", action="store_true")
@@ -363,7 +367,8 @@ def main() -> None:
 
     if args.scaling:
         print(json.dumps(run_scaling(
-            args.sf_dir, args.n_small, args.n_large, args.replicate or 8,
+            args.sf_dir, args.n_small, args.n_large,
+            args.replicate or (16 if args.funnel else 8),
             funnel=args.funnel)))
     elif args.funnel:
         print(json.dumps(run_funnel_bench(

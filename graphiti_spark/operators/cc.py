@@ -2,32 +2,61 @@
 (SURVEY.md D13/D14; north_rule: "connected-components-based entity
 canonicalization (large-star/small-star iterations on DataFrames)").
 
-The reference canonicalizes alias→canonical chains with an in-memory
-union-find (bulk_utils.py:69-98 directed, :498-535 undirected with
-min-uuid root). That is driver-bound; at 10^12-document scale the dedup
-pair set itself is distributed, so canonicalization runs as the
-alternating large-star/small-star algorithm (Kiveris et al., "Connected
-Components in MapReduce and Beyond", SoCC'14) expressed as plain
-DataFrame ops:
+Every node maps to the minimum id of its component — the reference's
+min-uuid root convention (bulk_utils.py:498-535). Two regimes share one
+entry point, chosen by the size of the symmetrized edge set, which is
+checkpointed once and then read by one bounded collect:
 
-  large-star: for each node u, attach every strictly-larger neighbor v to
-              u's minimum neighbor m (including u): emit (v, m) for v > u
-  small-star: attach u's minimum neighbor-or-self m to every neighbor
-              v ≤ u (v ≠ m): emit (v, m), plus (u, m)
+* at most ``GATE`` edge rows — the driver regime. The collected Arrow
+  table runs the reference's own algorithm, min-root union-find with
+  path compression, and the mapping returns as a local relation
+  (``LocalTableScan``: no Python workers, a short plan). This is the
+  common case: the graphs this engine canonicalizes (near-dup doc
+  pairs, entity duplicate pairs) have hundreds to thousands of edges,
+  where the distributed fixpoint's cost is its per-job floor, not data.
+* above ``GATE`` — the distributed regime: the alternating
+  large-star/small-star algorithm (Kiveris et al., "Connected
+  Components in MapReduce and Beyond", SoCC'14) as plain DataFrame ops:
 
-Iterate to fixpoint; afterwards every node points at the minimum id of
-its component — exactly the reference's min-uuid root convention
-(bulk_utils.py:513-517). Each iteration is two shuffles on node id;
-`localCheckpoint` truncates the growing lineage. Skew note: hub
-components concentrate on their minimum node; large-star halves long
-chains logarithmically, and AQE skew-join splitting handles the residual
-hot keys, so convergence is O(log n) iterations.
+    large-star: for each node u, attach every strictly-larger neighbor v
+                to u's minimum neighbor m (including u): emit (v, m) for
+                v > u
+    small-star: attach u's minimum neighbor-or-self m to every neighbor
+                v ≤ u (v ≠ m): emit (v, m), plus (u, m)
+
+  iterated to fixpoint. Each iteration is two shuffles on node id;
+  `localCheckpoint` truncates the growing lineage. Hub components
+  concentrate on their minimum node; large-star halves long chains
+  logarithmically and AQE skew-join splitting handles the residual hot
+  keys, so convergence is O(log n) iterations.
+
+``GATE`` is sized from random graphs of 36-character ids with N
+undirected edges (2N edge rows) on a 4-core host, local[4], 3 GB heap
+(``python scripts/cc_gate.py``):
+
+  N     whole call: driver   distributed       driver collect + union-find
+                                                + Arrow build, driver RSS
+  10^4   2.4 s,  4 jobs       16.3 s, 101 jobs   0.1 s,  +11 MB Python
+  10^5   2.2 s,  4 jobs       29.0 s, 114 jobs   1.0 s,   +7 MB Python
+  10^6  10.8 s,  4 jobs      177.9 s, 117 jobs   8.9 s, +188 MB Python,
+                                                        +0.86 GB JVM
+
+The driver regime wins at every size measured; what bounds it is driver
+memory, which grows linearly (~100 MB Python and 0.4-0.6 GB transient
+JVM heap per million edge rows; a repeat draw measured +1.25 GB JVM at
+10^6). The gate sits at one million edge rows, well inside a default
+driver heap; above it the wasted collect costs about a second against
+a fixpoint of minutes.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+GATE = 1_000_000  # symmetrized edge rows; sized in the module docstring
 
 
 def _symmetrize(pairs: DataFrame) -> DataFrame:
@@ -71,6 +100,40 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
+def _driver_components(spark, edges: pa.Table) -> DataFrame:
+    """Min-root union-find over a collected symmetric edge table.
+
+    Node ids are sorted (Arrow's binary order is Spark's string order),
+    so the smallest index of a component is its minimum id and union
+    by smaller root yields the reference's min-uuid canonical directly.
+    """
+    keep = pc.less(edges["u"], edges["v"])  # each undirected edge once
+    u, v = pc.filter(edges["u"], keep), pc.filter(edges["v"], keep)
+    nodes = pc.unique(pa.chunked_array(u.chunks + v.chunks))
+    nodes = nodes.take(pc.sort_indices(nodes))
+    parent = list(range(len(nodes)))
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]  # path halving
+            x = parent[x]
+        return x
+
+    for a, b in zip(
+        pc.index_in(u, value_set=nodes).to_pylist(),
+        pc.index_in(v, value_set=nodes).to_pylist(),
+    ):
+        ra, rb = find(a), find(b)
+        if ra < rb:
+            parent[rb] = ra
+        elif rb < ra:
+            parent[ra] = rb
+    roots = pa.array([find(x) for x in range(len(nodes))], pa.int64())
+    return spark.createDataFrame(
+        pa.table({"uuid": nodes, "canonical_uuid": nodes.take(roots)})
+    )
+
+
 def connected_components(
     pairs: DataFrame,
     src: str = "src",
@@ -83,28 +146,27 @@ def connected_components(
     Isolated nodes (not in pairs) are absent; callers coalesce(canonical,
     own) after a left join — same contract as the reference's uuid_map.
     """
-    # Materialize the (possibly expensive) pair plan EXACTLY ONCE:
-    # checkpoint first, then probe emptiness on the checkpointed frame.
-    # The previous order (full count for the emptiness probe, THEN an
-    # eager checkpoint) evaluated an UNPERSISTED caller's entire pair
-    # pipeline twice — the curation funnel measured its 83 s MinHash
-    # stage 2× from exactly this (r5); persisted callers (the flagship
-    # pipeline persists `pairs`) were shielded by the cache and are
-    # unaffected by the reorder. isEmpty on a checkpointed frame is a
-    # cheap take(1) over materialized partitions — the take-retry
-    # UDF-re-run hazard the old comment guarded against is gone because
-    # nothing upstream of the checkpoint can re-run.
+    # Materialize the (possibly expensive) pair plan EXACTLY ONCE before
+    # anything reads it: probing an unpersisted caller's pair pipeline
+    # and then checkpointing it evaluated that pipeline twice (the
+    # curation funnel measured its 83 s MinHash stage 2x).
     edges = _symmetrize(
         pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     ).localCheckpoint(eager=True)
-    if edges.isEmpty():
-        spark = pairs.sparkSession
+    spark = pairs.sparkSession
+    # One bounded collect decides the regime. toArrow over a limit is a
+    # single job whatever the partition count (collect()/take() scan
+    # partitions incrementally, one job per round).
+    head = edges.limit(GATE + 1).toArrow()
+    if head.num_rows == 0:
         # JVM-side empty frame — createDataFrame([]) builds a Python-RDD
         # plan whose 32 empty tasks each pay Python-worker spin-up.
         return spark.range(0).select(
             F.col("id").cast("string").alias("uuid"),
             F.col("id").cast("string").alias("canonical_uuid"),
         )
+    if head.num_rows <= GATE:
+        return _driver_components(spark, head)
 
     def _fingerprint(df: DataFrame) -> tuple:
         """(row count, order-insensitive hash-sum) — one cheap agg job per
@@ -134,25 +196,3 @@ def connected_components(
         F.least(F.col("m"), F.col("u")).alias("canonical_uuid"),
     )
     return mapping
-
-
-def build_directed_uuid_map(pairs: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """Directed alias→canonical collapse (reference bulk_utils.py:69-98).
-
-    The reference's directed union-find ultimately just merges the chain's
-    connected component and picks the final find() root; with deterministic
-    content-derived ids the undirected min-uuid component is the stable
-    equivalent (the reference itself notes aliases may be lexicographically
-    smaller than the canonical — determinism, not direction, is what the
-    output contract needs). Returns (uuid, canonical_uuid) for all touched
-    nodes, identity rows included.
-    """
-    mapping = connected_components(pairs, src=src, dst=dst)
-    touched = (
-        pairs.select(F.col(src).alias("uuid"))
-        .union(pairs.select(F.col(dst).alias("uuid")))
-        .distinct()
-    )
-    return touched.join(mapping, "uuid", "left").select(
-        "uuid", F.coalesce("canonical_uuid", "uuid").alias("canonical_uuid")
-    )

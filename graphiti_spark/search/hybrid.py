@@ -156,10 +156,12 @@ def _channel(
             )
             from pyspark.sql import Window
 
+            # limit first: the unpartitioned rank window then sees at
+            # most `overfetch` rows, never the whole reachable set
             w = Window.orderBy(F.col("id"))
             ranked.append(
-                hits.select("id", "score", F.row_number().over(w).alias("rank"))
-                .limit(overfetch)
+                hits.orderBy("id").limit(overfetch)
+                .select("id", "score", F.row_number().over(w).alias("rank"))
             )
     if not ranked:
         raise ValueError(f"no usable methods in {cfg.methods}")

@@ -14,6 +14,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """``spark.driver.memory`` when SPARK_GRAFT_DRIVER_MEM is unset: half
+    of MemAvailable, between 1g and 16g. A fixed 16g heap on a 16 GB
+    host lets the JVM grow until the kernel OOM-kills it mid-run
+    instead of collecting garbage."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemAvailable:"))
+    except (OSError, StopIteration, ValueError):
+        return "16g"
+    return f"{min(max(kb // 2 // 1024, 1024), 16 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "graphiti-spark",
     master: str | None = None,
@@ -29,6 +42,7 @@ def get_spark(
     while cluster runs can size it to cores × a small factor.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory()
     if master is None:
         master = f"local[{cpus}]"
 
@@ -64,7 +78,7 @@ def get_spark(
         # a driver-OOM vector that has nothing to do with data. Cap the
         # rendered length; execution is unaffected.
         .config("spark.sql.maxPlanStringLength", "100000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
     )
     # Pre-back the whole heap at JVM start (provisioning, not throughput):
@@ -76,7 +90,6 @@ def get_spark(
     # (-Xms=-Xmx + AlwaysPreTouch on executors); opt-in because tests
     # prefer fast session spin-up over peak steady-state throughput.
     if os.environ.get("SPARK_GRAFT_PRETOUCH") == "1":
-        heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
         builder = builder.config(
             "spark.driver.extraJavaOptions", f"-Xms{heap} -XX:+AlwaysPreTouch"
         )

@@ -16,7 +16,8 @@ Outputs under --output:
   chunks/  training windows (doc_id, chunk_idx, start_token, n_tokens,
            chunk_text)
   stats.json  one JSON object: the per-stage survivor funnel plus the
-           dropped-LSH-bucket count (recall loss is never silent)
+           dropped-LSH-bucket count and, with SemDeDup, the docs that had
+           no embedding to compare (recall loss is never silent)
 
 Every decision is content-derived and deterministic — rerunning the
 job on the same input produces byte-identical outputs, so the corpus
@@ -36,6 +37,38 @@ import argparse
 import json
 import sys
 import time
+
+
+def semantic_dedup_docs(docs, embeddings, dropped_sink=None, **kw):
+    """SemDeDup over (doc_id, ...) docs with caller-supplied (vec_id,
+    embedding) rows → (kept docs, uncovered docs).
+
+    Only semantic duplicates are dropped: a doc with no embedding row
+    (or a null embedding) cannot be compared, so it survives and is
+    returned in ``uncovered`` for the stats, never lost silently.
+    ``kw`` goes to ``dedup_docs.semantic_dedup``.
+    """
+    from pyspark.sql import functions as F
+
+    from graphiti_spark.operators.dedup_docs import semantic_dedup
+
+    embs = (
+        embeddings.select("vec_id", "embedding")
+        .filter(F.col("embedding").isNotNull())
+        .join(docs.select(F.col("doc_id").alias("vec_id")), "vec_id")
+    )
+    sem = semantic_dedup(embs, dropped_sink=dropped_sink, **kw)
+    kept = docs.join(
+        sem.filter(F.col("id") != F.col("canonical_id")).select(
+            F.col("id").alias("doc_id")
+        ),
+        "doc_id",
+        "left_anti",
+    )
+    uncovered = docs.join(
+        embs.select(F.col("vec_id").alias("doc_id")), "doc_id", "left_anti"
+    )
+    return kept, uncovered
 
 
 def main() -> None:
@@ -192,30 +225,17 @@ def main() -> None:
     # in stats exactly like dropped LSH buckets — recall loss at scale
     # is observable, never silent.
     if args.semantic_dedup_embeddings:
-        from graphiti_spark.operators.dedup_docs import semantic_dedup
-
-        embs = (
-            spark.read.parquet(args.semantic_dedup_embeddings)
-            .select("vec_id", "embedding")
-            .join(
-                docs.select(F.col("doc_id").alias("vec_id")), "vec_id"
-            )
-        )
         cell_sink: list = []
-        sem = semantic_dedup(
-            embs,
+        docs, uncovered = semantic_dedup_docs(
+            docs,
+            spark.read.parquet(args.semantic_dedup_embeddings),
             n_cells=args.semantic_n_cells,
             threshold=args.semantic_threshold,
             max_cell=args.semantic_max_cell or None,
             dropped_sink=cell_sink,
         )
-        docs = docs.join(
-            sem.filter(F.col("id") == F.col("canonical_id")).select(
-                F.col("id").alias("doc_id")
-            ),
-            "doc_id",
-        )
         if not args.no_funnel:
+            stats["semantic_uncovered_docs"] = uncovered.count()
             dropped = cell_sink[0].persist() if cell_sink else None
             stats["dropped_ivf_cells"] = dropped.count() if dropped is not None else 0
             stats["dropped_ivf_rows"] = (

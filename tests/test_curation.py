@@ -369,3 +369,30 @@ def test_semantic_decontaminate_empty_benchmark_returns_clean_rows(spark):
         map(tuple, semantic_decontaminate(corpus, bench).collect())
     )
     assert out == [(1, 0.0, 0, False, True), (2, 0.0, 0, False, True)]
+
+
+def test_curate_semantic_dedup_keeps_docs_without_embeddings(spark, tmp_path):
+    """The curate job's SemDeDup stage drops semantic duplicates only: a
+    doc with no embedding row (or a null embedding) survives and is
+    counted as uncovered, never lost in the join."""
+    from jobs.curate_corpus import semantic_dedup_docs
+
+    docs = spark.createDataFrame(
+        [(i, f"doc {i}") for i in range(1, 7)], "doc_id long, text string"
+    )
+    path = str(tmp_path / "embeddings.parquet")
+    spark.createDataFrame(
+        [
+            (1, [1.0, 0.0, 0.0]),
+            (2, [0.999, 0.01, 0.0]),  # duplicate of 1
+            (3, [0.0, 1.0, 0.0]),
+            (4, None),  # row present, embedding missing
+            (9, [0.0, 0.0, 1.0]),  # no such doc
+        ],
+        "vec_id long, embedding array<float>",
+    ).write.parquet(path)
+    kept, uncovered = semantic_dedup_docs(
+        docs, spark.read.parquet(path), n_cells=2, threshold=0.99
+    )
+    assert sorted(r.doc_id for r in kept.collect()) == [1, 3, 4, 5, 6]
+    assert sorted(r.doc_id for r in uncovered.collect()) == [4, 5, 6]

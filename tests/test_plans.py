@@ -509,3 +509,40 @@ def test_mean_pool_no_python_combinable_agg(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "HashAggregate" in plan
     assert "Window" not in plan
+
+
+def test_bfs_arm_ranks_after_the_limit(spark):
+    """The hybrid-search bfs arm ranks with an unpartitioned row_number
+    window; it must see only the overfetch-limited ids, never the whole
+    reachable set through a single partition (so must the RRF window
+    above it). The code must bound it itself: the optimizer rule that
+    can push a limit below such a window is switched off here."""
+    from graphiti_spark.search import hybrid as H
+
+    edges = spark.createDataFrame(
+        [(f"e{i}", "g", f"n{i}", f"n{i + 1}", "R", "f") for i in range(30)],
+        "uuid string, group_id string, source_node_uuid string, "
+        "target_node_uuid string, name string, fact string",
+    )
+    nodes = spark.createDataFrame(
+        [(f"n{i}", "node", "g", "s", None) for i in range(31)],
+        "uuid string, name string, group_id string, summary string, "
+        "name_embedding array<float>",
+    )
+    cfg = H.SearchConfig(nodes=H.ChannelConfig(["bfs"], "rrf"))
+    key = "spark.sql.optimizer.excludedRules"
+    saved = spark.conf.get(key, None)
+    spark.conf.set(
+        key, "org.apache.spark.sql.catalyst.optimizer.LimitPushDownThroughWindow"
+    )
+    try:
+        out = H.search("x", cfg, nodes=nodes, edges=edges, origin_uuids=["n0"])["nodes"]
+        lines = out._jdf.queryExecution().executedPlan().toString().splitlines()
+        # the default depth reaches n1..n3 from n0
+        assert sorted(r.id for r in out.collect()) == ["n1", "n2", "n3"]
+    finally:
+        spark.conf.set(key, saved) if saved is not None else spark.conf.unset(key)
+    windows = [i for i, line in enumerate(lines) if "Window [" in line]
+    assert len(windows) == 2
+    for i in windows:
+        assert "TakeOrderedAndProject(limit=" in lines[i + 1], lines[i + 1]
