@@ -36,14 +36,6 @@ def episode_uuid(url: str) -> str:
     return _sha256_hex(url)
 
 
-def entity_uuid(group_id: str, name_norm: str) -> str:
-    return _sha256_hex(f"{group_id}{SEP}{name_norm}")
-
-
-def edge_uuid(group_id: str, src: str, dst: str, pred: str, fact_norm: str) -> str:
-    return _sha256_hex(f"{group_id}{SEP}{src}{SEP}{dst}{SEP}{pred}{SEP}{fact_norm}")
-
-
 def mention_uuid(episode: str, entity: str) -> str:
     return _sha256_hex(f"{episode}{SEP}{entity}")
 
@@ -67,21 +59,3 @@ def edge_uuid_col(
 def mention_uuid_col(episode: Column, entity: Column) -> Column:
     return F.sha2(F.concat_ws(SEP, episode, entity), 256)
 
-
-# ---- the same identities as DuckDB SQL fragments (oracle side) ----
-
-def sql_episode_uuid(url_expr: str) -> str:
-    return f"sha256({url_expr})"
-
-
-def sql_entity_uuid(group_expr: str, name_expr: str) -> str:
-    return f"sha256({group_expr} || '{SEP}' || {name_expr})"
-
-
-def sql_edge_uuid(
-    group_expr: str, src_expr: str, dst_expr: str, pred_expr: str, fact_expr: str
-) -> str:
-    return (
-        f"sha256({group_expr} || '{SEP}' || {src_expr} || '{SEP}' || "
-        f"{dst_expr} || '{SEP}' || {pred_expr} || '{SEP}' || {fact_expr})"
-    )

@@ -19,7 +19,7 @@ until the final summary groupBy.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from graphiti_spark import ids
@@ -327,30 +327,3 @@ def update_communities(
         "has_member_appended": appended,
     }
 
-
-def determine_entity_community(
-    entity_uuid: str, has_member: DataFrame, edges: DataFrame
-) -> DataFrame:
-    """G4: the community an entity belongs to — direct membership, else
-    the mode of its neighbors' communities (reference
-    community_operations.py:246-331). Returns a 1-row DataFrame
-    (community_uuid, via)."""
-    direct = (
-        has_member.filter(F.col("entity_uuid") == entity_uuid)
-        .select(F.col("community_uuid"), F.lit("direct").alias("via"))
-        .limit(1)
-    )
-    nbrs = (
-        neighbor_weights(edges)
-        .filter(F.col("src") == entity_uuid)
-        .select(F.col("dst").alias("entity_uuid"))
-    )
-    by_nbr = (
-        has_member.join(F.broadcast(nbrs), "entity_uuid")
-        .groupBy("community_uuid")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy(F.col("n").desc(), F.col("community_uuid").asc())
-        .select("community_uuid", F.lit("neighbors").alias("via"))
-        .limit(1)
-    )
-    return direct.unionByName(by_nbr).limit(1)

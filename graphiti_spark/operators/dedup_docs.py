@@ -17,6 +17,11 @@ constants are shared via config.py), applied to the `documents` corpus:
   canonical_docs       near-dup pairs → connected components → one
                        canonical doc per cluster (reuses operators/cc.py)
 
+The three near-dup matchers differ only in their keys and their verify
+step: each hands its exploded keys to blocking.blocked_pairs
+(operators/blocking.py) for the self-join, a < b and the per-pair dedup,
+and SemDeDup caps its cells with blocking.capped_groups.
+
 All shuffles key on content-derived values (band hashes, chunk values) —
 uniform by construction, no hub skew. Shingle modes: 'char3' (reference
 name shingles), 'word' (token set), 'word3' (3-token grams — order
@@ -25,18 +30,18 @@ sensitive, the right default for prose dedup).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
 
 from graphiti_spark.functions.dedup_text import (
     jaccard_col,
     lsh_band_keys_col,
     minhash_signature_udf,
 )
+from graphiti_spark.operators.blocking import blocked_pairs, capped_groups
 
 MAX_BUCKET = 2000  # pathological-bucket guard (same role as resolve.py)
+BAND_KEYS = ["band_idx", "band_key"]
 
 
 def normalize_text_col(text):
@@ -86,6 +91,25 @@ def shingles_of(text_col, mode: str):
     raise ValueError(f"unknown shingle mode {mode!r}")
 
 
+def minhash_bands(
+    docs: DataFrame, id_col: str, text_col: str, mode: str
+) -> DataFrame:
+    """The MinHash front-end: (id, shingles, band_idx, band_key), one row
+    per (doc, LSH band). Deterministic: blake2b MinHash (no RNG)."""
+    signed = docs.select(
+        F.col(id_col).alias("id"),
+        shingles_of(F.col(text_col), mode).alias("shingles"),
+    ).withColumn("sig", minhash_signature_udf(F.col("shingles")))
+    return signed.select(
+        "id", "shingles", F.explode(lsh_band_keys_col(F.col("sig"))).alias("b")
+    ).select(
+        "id",
+        "shingles",
+        F.col("b.band_idx").alias("band_idx"),
+        F.col("b.band_key").alias("band_key"),
+    )
+
+
 def minhash_near_dup(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -97,47 +121,23 @@ def minhash_near_dup(
 ) -> DataFrame:
     """MinHash-LSH blocked near-dup pairs verified by exact Jaccard.
     Output (a_id, b_id, jaccard) with a_id < b_id, jaccard ≥ threshold,
-    rounded to 4 dp. Deterministic: blake2b MinHash (no RNG).
+    rounded to 4 dp.
 
     ``dropped_sink``: optional list; if given, a (band_idx, band_key,
     bucket_n) metrics frame of capped (recall-losing) buckets is
     appended — never drop silently."""
-    from graphiti_spark.operators.resolve import capped_buckets
-
-    prepared = docs.select(
-        F.col(id_col).alias("id"),
-        shingles_of(F.col(text_col), mode).alias("shingles"),
-    ).withColumn("sig", minhash_signature_udf(F.col("shingles")))
-
-    banded = prepared.select(
-        "id", "shingles", F.explode(lsh_band_keys_col(F.col("sig"))).alias("b")
-    ).select(
+    pairs, dropped = blocked_pairs(
+        minhash_bands(docs, id_col, text_col, mode),
+        BAND_KEYS,
         "id",
-        "shingles",
-        F.col("b.band_idx").alias("band_idx"),
-        F.col("b.band_key").alias("band_key"),
-    )
-    capped, dropped = capped_buckets(
-        banded, max_bucket, keys=["band_idx", "band_key"]
+        ["shingles"],
+        max_bucket,
     )
     if dropped_sink is not None:
         dropped_sink.append(dropped)
-    left = capped.select(
-        "band_idx", "band_key",
-        F.col("id").alias("a_id"), F.col("shingles").alias("a_sh"),
-    )
-    right = capped.select(
-        "band_idx", "band_key",
-        F.col("id").alias("b_id"), F.col("shingles").alias("b_sh"),
-    )
-    pairs = (
-        left.join(right, ["band_idx", "band_key"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "a_sh", "b_id", "b_sh")
-        .dropDuplicates(["a_id", "b_id"])
-    )
+    jaccard = jaccard_col(F.col("a_shingles"), F.col("b_shingles"))
     return (
-        pairs.withColumn("jaccard", F.round(jaccard_col(F.col("a_sh"), F.col("b_sh")), 4))
+        pairs.withColumn("jaccard", F.round(jaccard, 4))
         .filter(F.col("jaccard") >= threshold)
         .select("a_id", "b_id", "jaccard")
     )
@@ -156,17 +156,7 @@ def build_minhash_index(
     its own buckets instead of scanning the corpus. Prior TEXT is not
     in the index — the incremental verifier re-reads it only for the
     candidate ids the band join surfaces."""
-    prepared = docs.select(
-        F.col(id_col).alias("id"),
-        shingles_of(F.col(text_col), mode).alias("shingles"),
-    ).withColumn("sig", minhash_signature_udf(F.col("shingles")))
-    return prepared.select(
-        "id", F.explode(lsh_band_keys_col(F.col("sig"))).alias("b")
-    ).select(
-        "id",
-        F.col("b.band_idx").alias("band_idx"),
-        F.col("b.band_key").alias("band_key"),
-    )
+    return minhash_bands(docs, id_col, text_col, mode).select("id", *BAND_KEYS)
 
 
 def minhash_near_dup_incremental(
@@ -197,19 +187,8 @@ def minhash_near_dup_incremental(
     verification candidates (a semi-join bounded by candidate count);
     bucket caps count the COMBINED bucket (new + prior rows per band
     key) and are surfaced via ``dropped_sink``, never silent."""
-    keys = ["band_idx", "band_key"]
-    new_prepared = new_docs.select(
-        F.col(id_col).alias("id"),
-        shingles_of(F.col(text_col), mode).alias("shingles"),
-    ).withColumn("sig", minhash_signature_udf(F.col("shingles")))
-    new_banded = new_prepared.select(
-        "id", "shingles", F.explode(lsh_band_keys_col(F.col("sig"))).alias("b")
-    ).select(
-        "id",
-        "shingles",
-        F.col("b.band_idx").alias("band_idx"),
-        F.col("b.band_key").alias("band_key"),
-    )
+    keys = BAND_KEYS
+    new_banded = minhash_bands(new_docs, id_col, text_col, mode)
     # prune the prior index to the batch's band keys FIRST: the only
     # prior-sized read, and it's key-pruned (bucket/partition pruning
     # when the index table is laid out by band)
@@ -220,21 +199,11 @@ def minhash_near_dup_incremental(
 
     # combined bucket cap: the pair join below fans out with the TOTAL
     # bucket population, so the cap must count both sides
-    from graphiti_spark.operators.resolve import capped_buckets
-
-    all_banded = (
-        new_banded.select("id", *keys)
-        .unionByName(prior_hits)
+    kept_keys, dropped = capped_groups(
+        new_banded.select("id", *keys).unionByName(prior_hits), keys, max_bucket
     )
-    _, dropped = capped_buckets(all_banded, max_bucket, keys=keys)
     if dropped_sink is not None:
         dropped_sink.append(dropped)
-    kept_keys = (
-        all_banded.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("bucket_n"))
-        .filter(F.col("bucket_n") <= max_bucket)
-        .select(*keys)
-    )
     new_k = new_banded.join(kept_keys, keys, "left_semi")
     prior_k = prior_hits.join(kept_keys, keys, "left_semi")
 
@@ -255,21 +224,22 @@ def minhash_near_dup_incremental(
     )
     cand = nn.unionByName(np_).dropDuplicates(["a_id", "b_id"])
 
-    # shingle lookup bounded by the candidate set: batch shingles are in
-    # hand; prior shingles are recomputed for candidate ids only
+    # shingle lookup bounded by the candidate set: the batch's own text
+    # plus prior text for candidate ids only
     cand_ids = cand.select(F.col("a_id").alias("id")).unionByName(
         cand.select(F.col("b_id").alias("id"))
     ).distinct()
-    prior_sh = (
-        prior_docs.join(
-            cand_ids.withColumnRenamed("id", id_col), id_col, "left_semi"
-        )
+    prior_cand = prior_docs.join(
+        cand_ids.withColumnRenamed("id", id_col), id_col, "left_semi"
+    )
+    sh = (
+        new_docs.select(id_col, text_col)
+        .unionByName(prior_cand.select(id_col, text_col))
         .select(
             F.col(id_col).alias("id"),
             shingles_of(F.col(text_col), mode).alias("shingles"),
         )
     )
-    sh = new_prepared.select("id", "shingles").unionByName(prior_sh)
     pairs = (
         cand.join(
             sh.select(F.col("id").alias("a_id"), F.col("shingles").alias("a_sh")),
@@ -397,23 +367,8 @@ def simhash_near_dup(
     ).select(
         "id", "simhash", F.col("c.ci").alias("ci"), F.col("c.cv").alias("cv")
     )
-    pairs = (
-        chunks.alias("a")
-        .join(
-            chunks.alias("b"),
-            (F.col("a.ci") == F.col("b.ci"))
-            & (F.col("a.cv") == F.col("b.cv"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("a_id"),
-            F.col("a.simhash").alias("a_sim"),
-            F.col("b.id").alias("b_id"),
-            F.col("b.simhash").alias("b_sim"),
-        )
-        .dropDuplicates(["a_id", "b_id"])
-    )
-    hamming = F.bit_count(F.col("a_sim").bitwiseXOR(F.col("b_sim")))
+    pairs, _ = blocked_pairs(chunks, ["ci", "cv"], "id", ["simhash"])
+    hamming = F.bit_count(F.col("a_simhash").bitwiseXOR(F.col("b_simhash")))
     return (
         pairs.withColumn("hamming", hamming)
         .filter(F.col("hamming") <= max_hamming)
@@ -494,18 +449,7 @@ def embedding_near_dup(
     ).select(
         "id", "v", F.col("tb.table").alias("table"), F.col("tb.bucket").alias("bucket")
     )
-    left = tagged.select(
-        "table", "bucket", F.col("id").alias("a_id"), F.col("v").alias("a_v")
-    )
-    right = tagged.select(
-        "table", "bucket", F.col("id").alias("b_id"), F.col("v").alias("b_v")
-    )
-    pairs = (
-        left.join(right, ["table", "bucket"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "a_v", "b_id", "b_v")
-        .dropDuplicates(["a_id", "b_id"])
-    )
+    pairs, _ = blocked_pairs(tagged, ["table", "bucket"], "id", ["v"])
     return (
         pairs.withColumn("cos", F.round(cosine_col(F.col("a_v"), F.col("b_v")), 4))
         .filter(F.col("cos") >= threshold)
@@ -997,7 +941,7 @@ def semantic_dedup(
     n_cells is set RIGHT is now observable: pass ``max_cell`` to cap
     the self-join (cells above it contribute no pairs — their members
     fall out as singletons) and ``dropped_sink`` to receive the
-    (cell, cell_n) metrics frame (similarity.capped_cells — the
+    (cell, cell_n) metrics frame (blocking.capped_groups — the
     dropped_lsh_buckets contract, VERDICT r4 wrong #2). Components
     never span cells by construction.
 
@@ -1005,17 +949,14 @@ def semantic_dedup(
     map to themselves.
     """
     from graphiti_spark.functions.embed import cosine_col
-    from graphiti_spark.search.similarity import (
-        capped_cells,
-        ivf_assign,
-        ivf_centroids,
-    )
+    from graphiti_spark.search.similarity import ivf_assign, ivf_centroids
 
     centroids = ivf_centroids(embs, id_col, vec_col, n_cells)
     assigned = ivf_assign(embs, centroids, id_col, vec_col)
     pair_side = assigned
     if max_cell is not None:
-        pair_side, dropped = capped_cells(assigned, max_cell)
+        kept_cells, dropped = capped_groups(assigned, ["cell"], max_cell, "cell_n")
+        pair_side = assigned.join(kept_cells, ["cell"])
         if dropped_sink is not None:
             dropped_sink.append(dropped)
     x = pair_side.select(

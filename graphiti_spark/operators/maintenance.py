@@ -1,4 +1,4 @@
-"""Graph maintenance: point lookups, pagination, episode removal
+"""Graph maintenance: keyset pagination, between-node lookups, episode removal
 (SURVEY.md S5/S9).
 
 Reference semantics:
@@ -18,11 +18,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def get_by_uuids(df: DataFrame, uuids: list[str]) -> DataFrame:
-    """S5 point lookup (reference nodes.py:331-412)."""
-    return df.filter(F.col("uuid").isin(uuids))
 
 
 def get_by_group_ids(

@@ -13,8 +13,9 @@ Batch formulation (replaces the per-name loop):
      (D1: names that normalize equal share a uuid by construction).
   2. entropy gate (native columns) splits names into fuzzy-eligible vs not.
   3. fuzzy-eligible names: native shingles → MinHash (pandas UDF) →
-     explode LSH bands → self-join on (band_idx, band_key) = THE blocking
-     shuffle (reference's lsh_buckets, dedup_helpers.py:117-128,170-195).
+     explode LSH bands → blocking.blocked_pairs on (group_id, band_idx,
+     band_key) = THE blocking shuffle (reference's lsh_buckets,
+     dedup_helpers.py:117-128,170-195).
   4. candidate pairs → native Jaccard; accept ≥ 0.9 (D7); pairs failing
      Jaccard get the embedding-cosine fallback ≥ 0.95 (D8').
   5. accepted duplicate pairs → connected components (min-uuid canonical,
@@ -23,8 +24,8 @@ Batch formulation (replaces the per-name loop):
 Scale notes: everything after step 1 operates on DISTINCT names — orders
 of magnitude smaller than the mention stream. The LSH band join is the
 only quadratic-risk stage; bucket sizes are bounded by band collisions
-(reference accepts the same bound), and a per-bucket cap guards
-pathological buckets. groupBy in step 1 does map-side partial
+(reference accepts the same bound), and a per-bucket cap
+(blocking.capped_groups) guards pathological buckets. groupBy in step 1 does map-side partial
 aggregation; hub names never concentrate because the key is the name
 itself (uniform by hash).
 """
@@ -49,9 +50,11 @@ from graphiti_spark.functions.dedup_text import (
     shingles_col,
 )
 from graphiti_spark.functions.embed import cosine_col, make_embed_udf
+from graphiti_spark.operators.blocking import blocked_pairs, capped_groups
 
 # Guard against pathological LSH buckets (all-identical band values).
 MAX_BUCKET_SIZE = 1000
+BAND_KEYS = ["group_id", "band_idx", "band_key"]
 
 
 def extracted_entities(mentions: DataFrame) -> DataFrame:
@@ -97,27 +100,6 @@ def banded_names(entities: DataFrame) -> DataFrame:
     )
 
 
-def capped_buckets(
-    banded: DataFrame,
-    max_bucket: int = MAX_BUCKET_SIZE,
-    keys: list[str] | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Split banded rows into (kept, dropped_bucket_metrics).
-
-    A bucket above max_bucket is a pathological LSH collision (e.g. all-
-    identical band values); dropping it bounds the pair join but LOSES
-    RECALL, so the drop is surfaced as a metrics frame
-    (*keys, bucket_n) instead of silently vanishing — callers feed it to
-    lineage/bench output."""
-    keys = keys or ["group_id", "band_idx", "band_key"]
-    bucket_sizes = banded.groupBy(*keys).agg(
-        F.count(F.lit(1)).alias("bucket_n")
-    )
-    kept = banded.join(bucket_sizes.filter(F.col("bucket_n") <= max_bucket), keys)
-    dropped = bucket_sizes.filter(F.col("bucket_n") > max_bucket)
-    return kept, dropped
-
-
 def _score_candidate_pairs(pairs: DataFrame) -> DataFrame:
     """Shared D7/D8' acceptance: exact Jaccard ≥ 0.9, else near-misses
     (0.5 ≤ j < 0.9) escalate to embedding cosine ≥ 0.95. Input columns:
@@ -156,33 +138,15 @@ def duplicate_pairs(
 
     ``dropped_sink``: optional list; if given, the dropped-bucket metrics
     DataFrame is appended (lazily evaluated by the caller)."""
-    banded = banded_names(entities)
-    capped, dropped = capped_buckets(banded)
+    pairs, dropped = blocked_pairs(
+        banded_names(entities),
+        BAND_KEYS,
+        "uuid",
+        ["name", "shingles"],
+        MAX_BUCKET_SIZE,
+    )
     if dropped_sink is not None:
         dropped_sink.append(dropped)
-
-    left = capped.select(
-        "group_id",
-        "band_idx",
-        "band_key",
-        F.col("uuid").alias("a_uuid"),
-        F.col("name").alias("a_name"),
-        F.col("shingles").alias("a_shingles"),
-    )
-    right = capped.select(
-        "group_id",
-        "band_idx",
-        "band_key",
-        F.col("uuid").alias("b_uuid"),
-        F.col("name").alias("b_name"),
-        F.col("shingles").alias("b_shingles"),
-    )
-    pairs = (
-        left.join(right, ["group_id", "band_idx", "band_key"])
-        .filter(F.col("a_uuid") < F.col("b_uuid"))
-        .select("a_uuid", "a_name", "a_shingles", "b_uuid", "b_name", "b_shingles")
-        .dropDuplicates(["a_uuid", "b_uuid"])
-    )
     return _score_candidate_pairs(pairs)
 
 
@@ -201,25 +165,25 @@ def duplicate_pairs_between(
     old_banded = banded_names(existing_entities)
     # cap on the combined bucket population (mirrors what one big batch
     # would have seen)
-    combined, dropped = capped_buckets(new_banded.unionByName(old_banded))
+    kept_keys, dropped = capped_groups(
+        new_banded.unionByName(old_banded), BAND_KEYS, MAX_BUCKET_SIZE
+    )
     if dropped_sink is not None:
         dropped_sink.append(dropped)
-    keys = ["group_id", "band_idx", "band_key"]
-    kept_keys = combined.select(*keys).distinct()
-    left = new_banded.join(kept_keys, keys).select(
-        *keys,
+    left = new_banded.join(kept_keys, BAND_KEYS).select(
+        *BAND_KEYS,
         F.col("uuid").alias("a_uuid"),
         F.col("name").alias("a_name"),
         F.col("shingles").alias("a_shingles"),
     )
-    right = old_banded.join(kept_keys, keys).select(
-        *keys,
+    right = old_banded.join(kept_keys, BAND_KEYS).select(
+        *BAND_KEYS,
         F.col("uuid").alias("b_uuid"),
         F.col("name").alias("b_name"),
         F.col("shingles").alias("b_shingles"),
     )
     pairs = (
-        left.join(right, keys)
+        left.join(right, BAND_KEYS)
         .filter(F.col("a_uuid") != F.col("b_uuid"))
         .select(
             F.least("a_uuid", "b_uuid").alias("lo"),

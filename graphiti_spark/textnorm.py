@@ -87,11 +87,6 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
     return html.map(lambda b: extract_text(b))
 
 
-@F.pandas_udf(StringType())
-def clean_input_udf(text: pd.Series) -> pd.Series:
-    return text.map(lambda t: clean_input(t) if t is not None else None)
-
-
 def truncate_at_sentence_col(text: Column, max_chars: int) -> Column:
     """Native-Spark truncate_at_sentence (no UDF).
 

@@ -89,6 +89,34 @@ def test_embedding_near_dup_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def _blocked_site(spark, site):
+    if site == "duplicate_pairs":
+        from graphiti_spark.functions.smalldf import literal_df
+        from graphiti_spark.operators.resolve import duplicate_pairs
+
+        ents = literal_df(
+            spark,
+            [("u1", "g", "acme corporation"), ("u2", "g", "acme corp")],
+            [("uuid", "string"), ("group_id", "string"), ("name", "string")],
+        )
+        return duplicate_pairs(ents)
+    from graphiti_spark.operators import dedup_docs
+
+    return getattr(dedup_docs, site)(spark.read.parquet(f"{SF}/documents.parquet"))
+
+
+@pytest.mark.parametrize(
+    "site", ["duplicate_pairs", "minhash_near_dup", "simhash_near_dup"]
+)
+def test_blocked_pair_sites_no_cartesian(spark, site):
+    """Entity LSH, document MinHash and SimHash pair only through the
+    key equi-join of blocking.blocked_pairs: a CartesianProduct or
+    BroadcastNestedLoopJoin means the blocking stopped pruning."""
+    plan = _plan(_blocked_site(spark, site))
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
 def test_minhash_incremental_no_cartesian(spark):
     """The batch-vs-prior-index dedup must pair ONLY through band-key
     equi-joins (new x new and new x prior-index) and fetch prior text
