@@ -54,7 +54,7 @@ def _pipe(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         ref, out = cached
         if ref() is spark and _session_alive(spark):
             return out
-    out = run_pipeline(spark, sf_dir, RunConfig())  # stages self-persist
+    out = run_pipeline(spark, sf_dir, RunConfig())  # stages self-checkpoint
     _CACHE[key] = (weakref.ref(spark), out)
     return out
 

@@ -155,11 +155,12 @@ def run_bench(
 
         cfg = RunConfig(persist_stages=BATCH_PERSIST_STAGES)
     else:
-        # Persist exactly the reused subtrees (r3, VERDICT #6): the dedup
-        # chain (consumed by the eager CC fixpoint AND three final
+        # Materialize exactly the reused subtrees (r3, VERDICT #6): the
+        # dedup chain (consumed by the eager CC fixpoint AND three final
         # tables), mentions (entities + mention_edges) and edges_merged
-        # (edges + nodes). Blanket persist measured slower: caching the
-        # wide intermediate rows is memory pressure, not reuse.
+        # (edges + nodes). Blanket materialization measured slower:
+        # holding the wide intermediate rows is memory pressure, not
+        # reuse.
         cfg = RunConfig(
             persist_stages=frozenset(
                 {"episodes", "token_stream", "mentions", "entities",
@@ -169,8 +170,9 @@ def run_bench(
     t0 = time.monotonic()
     out = run_pipeline(spark, sf_dir, cfg)
     # DAG build is NOT free: the CC fixpoint runs eagerly (extraction →
-    # blocking → large-star/small-star iterations), filling the persisted
-    # dedup subtree — the shuffle-heaviest slice of the pipeline.
+    # blocking → large-star/small-star iterations), and every selected
+    # stage is checkpointed eagerly — the shuffle-heaviest slice of the
+    # pipeline.
     timings["build_cc"] = round(time.monotonic() - t0, 3)
 
     counts: dict[str, int] = {}
@@ -199,8 +201,8 @@ def run_bench(
         counts["edges"] = row["n"]
         timings["edges_dag"] = round(time.monotonic() - t0, 3)
     else:
-        # Materialize the DELIVERABLE graph tables only (edges_merged
-        # first so its persist backs edges and nodes): re-counting every
+        # Count the DELIVERABLE graph tables only (edges_merged is
+        # already checkpointed and backs edges and nodes): re-counting every
         # intermediate stage re-measured work the finals already cover —
         # the r2 bench's wall was dominated by exactly that (VERDICT #6).
         for name in ("edges_merged", "edges", "nodes", "mention_edges"):

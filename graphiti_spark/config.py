@@ -139,15 +139,18 @@ class RunConfig:
     # iterative LP fixpoint the flagship triple path doesn't need.
     with_communities: bool = False
     checkpoint_dir: str | None = None   # enables lineage + stage resume
-    # Which stages to cache. True = all (interactive/bench mode);
-    # False = none; a set of stage names = selective (single-output
-    # batch runs cache only the small, heavily-reused dedup subtree and
-    # let Catalyst fuse the big row streams into deep jobs).
+    # Which stages to materialize when no checkpoint_dir is set; each
+    # selected stage is computed once by an eager localCheckpoint and
+    # later stages read it without its lineage. True = all
+    # (interactive/bench mode); False = none; a set of stage names =
+    # selective (single-output batch runs cut only at the small,
+    # heavily-reused dedup subtree and let Catalyst fuse the big row
+    # streams into deep jobs).
     persist_stages: bool | frozenset = True
     extra: dict = field(default_factory=dict)
 
 
-# The small, reused subtree worth caching in single-output batch runs:
+# The small, reused subtree worth materializing in single-output batch runs:
 # the token stream feeds both extraction outputs (one posexplode pass);
 # entities/pairs/uuid_map are tiny and consumed by several joins (incl.
 # the eager CC fixpoint).

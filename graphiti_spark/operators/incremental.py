@@ -501,15 +501,15 @@ def ingest_incremental(
     cfg = cfg or RunConfig()
 
     # --- O(|batch|): extraction (one token-stream pass for both outputs;
-    # the persisted stream is batch-sized) ---
+    # the checkpointed stream is batch-sized) ---
     from graphiti_spark.operators.extract import (
         extract_token_stream,
         mentions_from_stream,
         triples_from_stream,
     )
 
-    episodes_new = pages_to_episodes(new_pages, cfg.run_ts).persist()
-    stream_new = extract_token_stream(episodes_new).persist()
+    episodes_new = pages_to_episodes(new_pages, cfg.run_ts).localCheckpoint()
+    stream_new = extract_token_stream(episodes_new).localCheckpoint()
     mentions_new = mentions_from_stream(stream_new)
     triples_new = triples_from_stream(stream_new)
     return ingest_extracted(
@@ -551,7 +551,7 @@ def ingest_extracted(
         prior_map = canonical_uuid_map(prior_entities, prior_pairs)
     prior_map = prior_map.select("uuid", "canonical_uuid")
 
-    entities_new = extracted_entities(mentions_new).persist()
+    entities_new = extracted_entities(mentions_new).localCheckpoint()
 
     entities_all = merge_entity_index(prior_entities, entities_new)
 
@@ -618,7 +618,9 @@ def ingest_extracted(
     )
 
     # --- touched prior edges (repoint ∪ key collision) ---
-    rows_new = edge_provenance_rows(triples_new, delta_map, map_small).persist()
+    rows_new = edge_provenance_rows(
+        triples_new, delta_map, map_small
+    ).localCheckpoint()
     new_keys = rows_new.select(_edge_uuid_from_key().alias("uuid")).distinct()
 
     rp_src = repoint.select(F.col("uuid").alias("source_node_uuid"))
@@ -692,7 +694,7 @@ def ingest_extracted(
         delta_map.select(F.col("canonical_uuid").alias("uuid"))
         .unionByName(repoint.select("uuid"))
         .distinct()
-        .persist()
+        .localCheckpoint()
     )
     aliases_needed = uuid_map_all.join(
         affected_canon.withColumnRenamed("uuid", "canonical_uuid"),

@@ -168,17 +168,19 @@ def run_pipeline_from_pages(
 
     def stage(name: str, thunk, partition_by=None) -> DataFrame:
         if ckpt is None:
-            # No checkpoint dir: persist each stage output so downstream
-            # stages (and the eager CC fixpoint) never recompute the
-            # extraction chain. `pages` is excluded — its html binary is
-            # bulky and consumed exactly once by `episodes`.
+            # No checkpoint dir: cut each selected stage's lineage with an
+            # eager localCheckpoint, so later stages plan over a short
+            # LogicalRDD leaf. persist() instead would nest every upstream
+            # cached plan into each stage (megabyte plan strings) and
+            # re-run the Python UDF stages. `pages` is excluded — its html
+            # binary is bulky and consumed exactly once by `episodes`.
             persist = (
                 cfg.persist_stages
                 if isinstance(cfg.persist_stages, bool)
                 else name in cfg.persist_stages
             )
             if persist and name != "pages":
-                return thunk().persist()
+                return thunk().localCheckpoint()
             return thunk()
         return materialize_stage(spark, thunk, ckpt, rid, name, partition_by)
 
@@ -227,7 +229,7 @@ def run_pipeline_from_pages(
     uuid_map = stage("uuid_map", lambda: canonical_uuid_map(entities, pairs))
 
     # SIZE-GATED broadcast decision for the remap joins: the map's real
-    # row count (one job over the persisted/tiny map), not a blind hint.
+    # row count (one job over the checkpointed/tiny map), not a blind hint.
     from graphiti_spark.config import BROADCAST_MAP_MAX_ROWS
 
     map_small = uuid_map.count() <= BROADCAST_MAP_MAX_ROWS

@@ -79,6 +79,25 @@ def test_byte_identity_invariant(spark, pipe):
     assert mismatches == 0
 
 
+def test_stage_selection_keeps_outputs(spark, pipe):
+    """Which stages are materialized never changes results: all, the
+    batch subset and none give the same final tables."""
+    from graphiti_spark.config import BATCH_PERSIST_STAGES
+    from scripts.verify_oracle import frame_hash
+
+    def hashes(out):
+        return {
+            name: frame_hash(out[name].columns,
+                             [tuple(r) for r in out[name].collect()])
+            for name in ("edges", "nodes", "mention_edges")
+        }
+
+    expected = hashes(pipe)
+    for stages in (BATCH_PERSIST_STAGES, False):
+        out = run_pipeline(spark, SF, RunConfig(persist_stages=stages))
+        assert hashes(out) == expected, stages
+
+
 def test_checkpoint_resume_identical(spark, tmp_path):
     """Kill-after-stage resume: run stops after `entities`; a fresh run
     with the same checkpoint dir skips completed stages and produces

@@ -574,3 +574,25 @@ def test_bfs_arm_ranks_after_the_limit(spark):
     assert len(windows) == 2
     for i in windows:
         assert "TakeOrderedAndProject(limit=" in lines[i + 1], lines[i + 1]
+
+
+# The largest saved output at sf0.001 renders ~8.3 k characters; the
+# bound keeps headroom for new columns and stays far under the 100 k
+# render cap (session.py) that truncation would hide.
+SAVED_PLAN_MAX_CHARS = 25_000
+
+
+def test_saved_outputs_plan_over_stage_boundaries(spark):
+    """Every saved output of the default (all stages materialized) run
+    plans over its checkpointed inputs instead of re-rendering the full
+    plan of every stage above it."""
+    from graphiti_spark.config import RunConfig
+    from graphiti_spark.pipeline import run_pipeline
+
+    out = run_pipeline(spark, SF, RunConfig())
+    sizes = {
+        name: len(out[name]._jdf.queryExecution().toString())
+        for name in ("nodes", "edges", "mention_edges", "episodes",
+                     "entities", "pairs", "uuid_map", "postings")
+    }
+    assert max(sizes.values()) < SAVED_PLAN_MAX_CHARS, sizes
