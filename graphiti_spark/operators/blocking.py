@@ -36,7 +36,12 @@ def blocked_pairs(
 
     ``pairs`` has columns a_<id_col>, a_<payload>…, b_<id_col>,
     b_<payload>… with a < b on the id. ``dropped`` is the
-    ``capped_groups`` metrics frame, or None when ``max_group`` is None."""
+    ``capped_groups`` metrics frame, or None when ``max_group`` is None.
+
+    ``rows`` is read three times (the group-size aggregate and both join
+    sides; twice without a cap). When the rows come out of a UDF, pass
+    them materialized (e.g. ``localCheckpoint()``), or every read runs
+    the UDF again."""
     dropped = None
     if max_group is not None:
         kept_keys, dropped = capped_groups(rows, keys, max_group)

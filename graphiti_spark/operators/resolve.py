@@ -13,11 +13,12 @@ Batch formulation (replaces the per-name loop):
      (D1: names that normalize equal share a uuid by construction).
   2. entropy gate (native columns) splits names into fuzzy-eligible vs not.
   3. fuzzy-eligible names: native shingles → MinHash (pandas UDF) →
-     explode LSH bands → blocking.blocked_pairs on (group_id, band_idx,
-     band_key) = THE blocking shuffle (reference's lsh_buckets,
+     explode LSH bands, checkpointed so each name is MinHashed once →
+     blocking.blocked_pairs on (group_id, band_idx, band_key) = THE
+     blocking shuffle (reference's lsh_buckets,
      dedup_helpers.py:117-128,170-195).
-  4. candidate pairs → native Jaccard; accept ≥ 0.9 (D7); pairs failing
-     Jaccard get the embedding-cosine fallback ≥ 0.95 (D8').
+  4. candidate pairs, one pass: native Jaccard ≥ 0.5 → embed both names
+     → accept Jaccard ≥ 0.9 (D7) or embedding cosine ≥ 0.95 (D8').
   5. accepted duplicate pairs → connected components (min-uuid canonical,
      D13/D14) → uuid_map(alias → canonical).
 
@@ -84,48 +85,46 @@ def banded_names(entities: DataFrame) -> DataFrame:
         .withColumn("sig", minhash_signature_udf(F.col("shingles")))
         .withColumn("bands", lsh_band_keys_col(F.col("sig")))
     )
-    return prepared.select(
-        "uuid",
-        "group_id",
-        "name",
-        "shingles",
-        F.explode("bands").alias("band"),
-    ).select(
-        "uuid",
-        "group_id",
-        "name",
-        "shingles",
-        F.col("band.band_idx").alias("band_idx"),
-        F.col("band.band_key").alias("band_key"),
+    # explode_outer + null filter, not explode: explode makes Spark infer
+    # a size(bands) > 0 filter below the projection, which copies the
+    # MinHash UDF into a second ArrowEvalPython
+    return (
+        prepared.select(
+            "uuid",
+            "group_id",
+            "name",
+            "shingles",
+            F.explode_outer("bands").alias("band"),
+        )
+        .filter(F.col("band").isNotNull())
+        .select(
+            "uuid",
+            "group_id",
+            "name",
+            "shingles",
+            F.col("band.band_idx").alias("band_idx"),
+            F.col("band.band_key").alias("band_key"),
+        )
     )
 
 
 def _score_candidate_pairs(pairs: DataFrame) -> DataFrame:
-    """Shared D7/D8' acceptance: exact Jaccard ≥ 0.9, else near-misses
-    (0.5 ≤ j < 0.9) escalate to embedding cosine ≥ 0.95. Input columns:
-    a_uuid, a_name, a_shingles, b_uuid, b_name, b_shingles."""
+    """Shared D7/D8' acceptance in one pass over the candidates: Jaccard
+    ≥ 0.5 → embed both names → accept Jaccard ≥ 0.9 or cosine ≥ 0.95
+    (pairs at ≥ 0.9 are embedded too; their cosine cannot reject them).
+    Input columns: a_uuid, a_name, a_shingles, b_uuid, b_name,
+    b_shingles, one row per pair, so the output needs no distinct."""
     embed_udf = make_embed_udf()
-    scored = pairs.withColumn(
-        "jaccard", jaccard_col(F.col("a_shingles"), F.col("b_shingles"))
-    )
-    by_jaccard = scored.filter(F.col("jaccard") >= FUZZY_JACCARD_THRESHOLD)
-    near_miss = (
-        scored.filter(
-            (F.col("jaccard") < FUZZY_JACCARD_THRESHOLD) & (F.col("jaccard") >= 0.5)
-        )
-        .withColumn("a_emb", embed_udf(F.col("a_name")))
-        .withColumn("b_emb", embed_udf(F.col("b_name")))
-        .withColumn("cos", cosine_col(F.col("a_emb"), F.col("b_emb")))
-        .filter(F.col("cos") >= EMBED_COSINE_THRESHOLD)
-    )
+    jaccard = jaccard_col(F.col("a_shingles"), F.col("b_shingles"))
+    cos = cosine_col(embed_udf(F.col("a_name")), embed_udf(F.col("b_name")))
     return (
-        by_jaccard.select(F.col("a_uuid").alias("src"), F.col("b_uuid").alias("dst"))
-        .union(
-            near_miss.select(
-                F.col("a_uuid").alias("src"), F.col("b_uuid").alias("dst")
-            )
+        pairs.select("a_uuid", "a_name", "b_uuid", "b_name", jaccard.alias("jaccard"))
+        .filter(F.col("jaccard") >= 0.5)
+        .filter(
+            (F.col("jaccard") >= FUZZY_JACCARD_THRESHOLD)
+            | (cos >= EMBED_COSINE_THRESHOLD)
         )
-        .distinct()
+        .select(F.col("a_uuid").alias("src"), F.col("b_uuid").alias("dst"))
     )
 
 
@@ -138,8 +137,10 @@ def duplicate_pairs(
 
     ``dropped_sink``: optional list; if given, the dropped-bucket metrics
     DataFrame is appended (lazily evaluated by the caller)."""
+    # blocked_pairs reads its rows three times: checkpoint them so the
+    # MinHash UDF runs once per name
     pairs, dropped = blocked_pairs(
-        banded_names(entities),
+        banded_names(entities).localCheckpoint(),
         BAND_KEYS,
         "uuid",
         ["name", "shingles"],
@@ -161,8 +162,9 @@ def duplicate_pairs_between(
     the whole batch). Acceptance rules identical to duplicate_pairs.
     Output (src, dst) with src < dst so downstream CC treats the union
     of within-batch and cross-batch pairs uniformly."""
-    new_banded = banded_names(new_entities)
-    old_banded = banded_names(existing_entities)
+    # each side is read twice (bucket cap, pair join): MinHash it once
+    new_banded = banded_names(new_entities).localCheckpoint()
+    old_banded = banded_names(existing_entities).localCheckpoint()
     # cap on the combined bucket population (mirrors what one big batch
     # would have seen)
     kept_keys, dropped = capped_groups(

@@ -79,3 +79,52 @@ def test_duplicate_pairs_cap_drops_and_reports(spark, monkeypatch):
     assert candidates[-1].isEmpty()
     dropped = sink[0].collect()
     assert dropped and all(r.bucket_n == 2 for r in dropped)
+
+
+def test_score_candidate_pairs_matches_d7_d8_rule(spark):
+    """Single-pass scoring equals the D7/D8' rule applied by hand:
+    accept Jaccard ≥ 0.9, or 0.5 ≤ Jaccard with embedding cosine
+    ≥ 0.95. Shingles are hand-built so each Jaccard band is pinned
+    independently of the names that drive the cosine."""
+    from graphiti_spark.config import (
+        EMBED_COSINE_THRESHOLD,
+        FUZZY_JACCARD_THRESHOLD,
+    )
+    from graphiti_spark.functions.embed import cosine, embed_text
+    from graphiti_spark.operators import resolve
+
+    def sh(n, lo=0):  # n distinct shingles, ids lo..lo+n-1
+        return [f"s{i}" for i in range(lo, lo + n)]
+
+    same = ("Acme Corporation", "acme corporation")
+    other = ("Acme Corporation", "Zenith Bank")
+    cases = [
+        # (a_uuid, b_uuid, (a_name, b_name), a_shingles, b_shingles)
+        ("j10", "x", other, sh(4), sh(4)),  # j = 1.0, cosine low
+        ("j09", "x", other, sh(9), sh(10)),  # j = 0.9 exactly
+        ("jmid_hi", "x", same, sh(6), sh(6, 2)),  # j = 0.5, cosine 1.0
+        ("jmid_lo", "x", other, sh(6), sh(6, 2)),  # j = 0.5, cosine low
+        ("jlow_hi", "x", same, sh(4), sh(4, 3)),  # j = 1/7, cosine 1.0
+        ("empty_mid", "x", ("", "acme corporation"), sh(6), sh(6, 2)),
+        ("empty_hi", "x", ("", "acme corporation"), sh(4), sh(4)),
+    ]
+    pairs = spark.createDataFrame(
+        [(a, n[0], sa, b, n[1], sb) for a, b, n, sa, sb in cases],
+        "a_uuid string, a_name string, a_shingles array<string>, "
+        "b_uuid string, b_name string, b_shingles array<string>",
+    )
+
+    def accepted_by_hand(names, sa, sb):
+        j = len(set(sa) & set(sb)) / len(set(sa) | set(sb))
+        if j >= FUZZY_JACCARD_THRESHOLD:
+            return True
+        ea, eb = (embed_text(n) for n in names)
+        if j < 0.5 or ea is None or eb is None:
+            return False
+        return cosine(ea, eb) >= EMBED_COSINE_THRESHOLD
+
+    want = {(a, b) for a, b, n, sa, sb in cases if accepted_by_hand(n, sa, sb)}
+    got = resolve._score_candidate_pairs(pairs).collect()
+    assert len(got) == len(want)  # one row per pair, no distinct needed
+    assert {(r.src, r.dst) for r in got} == want
+    assert want == {("j10", "x"), ("j09", "x"), ("jmid_hi", "x"), ("empty_hi", "x")}

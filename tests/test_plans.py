@@ -596,3 +596,58 @@ def test_saved_outputs_plan_over_stage_boundaries(spark):
                      "entities", "pairs", "uuid_map", "postings")
     }
     assert max(sizes.values()) < SAVED_PLAN_MAX_CHARS, sizes
+
+
+@pytest.fixture(scope="module")
+def sf_entities(spark):
+    """The sf0.001 entities, checkpointed the way run_pipeline cuts its
+    `entities` stage."""
+    from graphiti_spark.config import RunConfig
+    from graphiti_spark.operators.extract import (
+        extract_token_stream,
+        mentions_from_stream,
+    )
+    from graphiti_spark.operators.resolve import extracted_entities
+    from graphiti_spark.sources.pages import load_pages, pages_to_episodes
+
+    episodes = pages_to_episodes(load_pages(spark, SF), RunConfig().run_ts)
+    mentions = mentions_from_stream(extract_token_stream(episodes))
+    return extracted_entities(mentions).localCheckpoint()
+
+
+def _minhash_evals(df) -> int:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return sum(
+        "ArrowEvalPython [minhash_signature_udf" in line
+        for line in plan.splitlines()
+    )
+
+
+def test_banded_names_runs_minhash_once(sf_entities):
+    """One MinHash evaluation per read of the band rows: `explode` would
+    make Spark infer a size(bands) > 0 filter and copy the UDF below the
+    projection into a second ArrowEvalPython."""
+    from graphiti_spark.operators.resolve import banded_names
+
+    assert _minhash_evals(banded_names(sf_entities)) == 1
+
+
+def test_duplicate_pairs_reads_materialized_bands(sf_entities):
+    """blocked_pairs reads its rows three times; duplicate_pairs hands it
+    checkpointed band rows, so its own plan runs no MinHash at all."""
+    from graphiti_spark.operators.resolve import duplicate_pairs
+
+    assert _minhash_evals(duplicate_pairs(sf_entities)) == 0
+
+
+def test_duplicate_pairs_plan_string_bounded(sf_entities):
+    """The `pairs` stage plan renders ~21 k characters with expression
+    ids stripped (they widen as the session ages); when every read of
+    the band rows re-planned the MinHash chain it passed the 100 k
+    render cap."""
+    import re
+
+    from graphiti_spark.operators.resolve import duplicate_pairs
+
+    text = duplicate_pairs(sf_entities)._jdf.queryExecution().toString()
+    assert len(re.sub(r"#\d+", "#", text)) < SAVED_PLAN_MAX_CHARS
