@@ -1162,7 +1162,8 @@ def _q_docs_curation_funnel(spark, sf_dir):
     """The COMPOSED curation funnel (r4): exact dedup → near-dup
     canonicals → C4 line dedup → language/quality gates → deterministic
     sample, each stage consuming the previous stage's survivors — the
-    oracle-able core of jobs/curate_corpus.py. Every stage is
+    oracle projection of curation.curate_docs, the composition
+    jobs/curate_corpus.py runs with its optional stages. Every stage is
     hash-verified standalone elsewhere; this entry hash-proves the
     composition (survivor sets, rewritten text feeding the gates, the
     final content sha of what ships)."""

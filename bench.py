@@ -240,8 +240,9 @@ def run_funnel_bench(
 ) -> dict:
     """Curation-funnel core throughput (r5, VERDICT r4 next #6): exact
     dedup → MinHash near-dup canonicals → C4 line dedup → language +
-    quality gates (operators.curation.curation_funnel, the oracle-able
-    core of jobs/curate_corpus.py) over documents.parquet. Metric =
+    quality gates (operators.curation.curation_funnel, the oracle
+    projection of the composition jobs/curate_corpus.py runs) over
+    documents.parquet. Metric =
     input docs/sec; the final aggregate depends on content_sha AND
     quality so no gate stage can be pruned. Same pre-touch/warmup/
     replication discipline as the KG bench."""

@@ -1,6 +1,7 @@
 """Corpus-curation operators for training-data pipelines: PII
 detection / redaction, benchmark decontamination, token-window
-chunking.
+chunking, and ``curate_docs``, the one composition of the curation
+funnel.
 
 The reference (peabodyAdmin/graphiti) has no corpus-hygiene layer —
 like textstats.py these extend the engine for the 100 TB web-text use
@@ -27,6 +28,8 @@ no backreferences — so the DuckDB oracles reproduce matches exactly.
 from __future__ import annotations
 
 import re
+from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -546,6 +549,236 @@ def semantic_decontaminate(
     )
 
 
+@dataclass
+class Curation:
+    """What ``curate_docs`` returns, all lazy. ``docs``: the survivors
+    with text, the gate columns and the sampling draw u. ``stages``:
+    each stage that ran, in order, to a frame whose row count is its
+    survivor count. Recall-loss frames (None when the stage is off):
+    capped LSH buckets, capped IVF cells (cell, cell_n), and the docs
+    SemDeDup had no embedding for."""
+
+    docs: DataFrame
+    stages: dict[str, DataFrame]
+    dropped_lsh_buckets: DataFrame
+    dropped_ivf_cells: DataFrame | None = None
+    semantic_uncovered: DataFrame | None = None
+
+    def counts(self) -> dict[str, int]:
+        """Each stage's survivor count plus the recall-loss counts
+        (dropped_lsh_buckets; with SemDeDup semantic_uncovered_docs,
+        dropped_ivf_cells, dropped_ivf_rows) from one query, not one
+        count job per frame."""
+        parts = {**self.stages, "dropped_lsh_buckets": self.dropped_lsh_buckets}
+        if self.semantic_uncovered is not None:
+            cells = self.dropped_ivf_cells
+            parts.update(
+                semantic_uncovered_docs=self.semantic_uncovered,
+                dropped_ivf_cells=cells,
+                dropped_ivf_rows=cells,
+            )
+        rows = reduce(DataFrame.union, [
+            df.select(
+                F.lit(k).alias("k"),
+                (F.col("cell_n") if k == "dropped_ivf_rows" else F.lit(1)).alias("n"),
+            )
+            for k, df in parts.items()
+            if df is not None
+        ])
+        got = dict(rows.groupBy("k").agg(F.sum("n")).collect())
+        return {k: got.get(k, 0) for k in parts}
+
+
+def _canonical(canon: DataFrame) -> DataFrame:
+    """The (doc_id) rows an (id, canonical_id) frame keeps."""
+    return canon.filter(F.col("id") == F.col("canonical_id")).select(
+        F.col("id").alias("doc_id")
+    )
+
+
+def _rewritten(d: DataFrame, rewrite: DataFrame) -> DataFrame:
+    """``d`` with its text replaced by a rewrite stage's (id,
+    text_dedup); docs the rewrite emptied drop out. Checkpointed with
+    the text: a rewrite is costlier than a scan and is read ~3× below."""
+    text = rewrite.select(
+        F.col("id").alias("doc_id"), F.col("text_dedup").alias("text")
+    )
+    return (
+        d.drop("text")
+        .join(text, "doc_id")
+        .filter(F.length("text") > 0)
+        .localCheckpoint()
+    )
+
+
+def curate_docs(
+    docs: DataFrame,
+    near_dup_threshold: float = 0.95,
+    embeddings: DataFrame | None = None,
+    semantic_threshold: float = 0.9,
+    semantic_n_cells: int = 16,
+    semantic_max_cell: int | None = None,
+    span_k: int = 0,
+    langs: tuple = ("en", "und"),
+    min_quality: float = 0.25,
+    max_dup_line_frac: float | None = None,
+    max_top2_frac: float | None = None,
+    ppl_keep: float = 1.0,
+    ppl_ref: DataFrame | None = None,
+    benchmark: DataFrame | None = None,
+    sample_rate: float = 0.5,
+    sample_seed: str = "curate",
+) -> Curation:
+    """The web-text curation funnel over (doc_id, text) docs, composed
+    once for the oracle, the bench and jobs/curate_corpus.py. Each stage
+    consumes the previous one's survivors; optional stages are off at
+    the defaults:
+
+      1. exact dedup — the canonical copy survives
+      2. MinHash near-dup pairs → connected-component canonicals
+      3. SemDeDup over ``embeddings`` (vec_id, embedding), IVF cells
+         capped at ``semantic_max_cell`` (None = no cap)
+      4. C4 corpus line dedup (rewrites the text)
+      5. exact-substring span dedup of ≥ ``span_k`` tokens (0 = off)
+      6. language + quality gates; the repetition gate when a
+         ``max_dup_line_frac`` / ``max_top2_frac`` cap is set
+      7. perplexity gate keeping the ``ppl_keep`` fraction (1.0 = off)
+         with the lowest bigram-LM perplexity; the LM trains on
+         ``ppl_ref`` (a text column) or on the survivors
+      8. decontamination against ``benchmark`` (a text column)
+      9. deterministic sample, u < ``sample_rate``
+
+    Stage boundaries localCheckpoint survivor-ID sets: each dedup stage
+    reads its input 3-4×, so uncut composition nests the upstream plan
+    multiplicatively (a 542 MB plan string at sf0.001), and text-sized
+    cuts at every boundary wrote the corpus to local disk 3× (~90 s of
+    non-scaling IO per 4-core leg). With an id set, each downstream
+    read embeds one scan + join, never the upstream pipeline. Only the
+    text rewrites (4, 5) and the perplexity gate's input, which the LM
+    reads ~6×, are cut with their text."""
+    from graphiti_spark.operators.dedup_docs import (
+        canonical_docs,
+        drop_dup_spans,
+        exact_dedup,
+        minhash_near_dup,
+        semantic_dedup_docs,
+    )
+    from graphiti_spark.operators.lm import perplexity, train_bigram_lm
+    from graphiti_spark.operators.sampling import (
+        filter_by_quantile,
+        sample_fraction,
+    )
+    from graphiti_spark.operators.textstats import (
+        language_id,
+        quality_score,
+        repetition_stats,
+    )
+
+    stages = {"input_docs": docs}
+
+    def keep(stage: str, d: DataFrame, ids: DataFrame) -> DataFrame:
+        ids = ids.localCheckpoint()
+        stages[stage] = ids
+        return d.join(ids, "doc_id")
+
+    # 1. exact dedup
+    d = keep("after_exact_dedup", docs, _canonical(exact_dedup(docs)))
+
+    # 2. near-dup canonicals over the survivors; capped LSH buckets
+    # lose recall, so their frame is returned
+    lsh_sink: list = []
+    pairs = minhash_near_dup(
+        d, threshold=near_dup_threshold, mode="word", dropped_sink=lsh_sink
+    )
+    d = keep("after_near_dup", d, _canonical(canonical_docs(d, pairs)))
+
+    # 3. SemDeDup (Abbas et al. 2023): capped cells and the docs with no
+    # embedding are returned, never silent
+    ivf_sink: list = []
+    uncovered = None
+    if embeddings is not None:
+        kept, uncovered = semantic_dedup_docs(
+            d,
+            embeddings,
+            n_cells=semantic_n_cells,
+            threshold=semantic_threshold,
+            max_cell=semantic_max_cell,
+            dropped_sink=ivf_sink,
+        )
+        d = keep("after_semantic_dedup", d, kept.select("doc_id"))
+
+    # 4. corpus-level line dedup
+    d = _rewritten(d, dedup_lines(d))
+    stages["after_line_dedup"] = d
+
+    # 5. span dedup (Lee et al. ExactSubstr): every corpus-duplicated
+    # run of >= span_k tokens goes, all copies, from the line-deduped text
+    if span_k:
+        d = _rewritten(d, drop_dup_spans(d, k=span_k))
+        stages["after_span_dedup"] = d
+
+    # 6. gates over the REWRITTEN text
+    lang = language_id(d).select(F.col("id").alias("doc_id"), "pred_lang")
+    qual = quality_score(d).select(
+        F.col("id").alias("doc_id"), F.col("score").alias("quality")
+    )
+    gated = d.join(lang, "doc_id").join(qual, "doc_id")
+    caps = {"dup_line_frac": max_dup_line_frac, "top2_char_frac": max_top2_frac}
+    if any(cap is not None for cap in caps.values()):
+        # id-sized checkpoint: the lazy repetition plan would push the
+        # gate stage's plan string past the 100 k render cap
+        rep = repetition_stats(d).select(F.col("id").alias("doc_id"), *caps)
+        gated = gated.join(rep.localCheckpoint(), "doc_id")
+    d = gated.filter(F.col("pred_lang").isin(*langs)).filter(
+        F.col("quality") >= min_quality
+    )
+    for col, cap in caps.items():
+        if cap is not None:
+            d = d.filter(F.col(col) <= cap)
+    stages["after_quality_gates"] = d
+
+    # 7. perplexity gate. The LM stage reads its input ~6× (model
+    # bigrams / prefixes / vocab, the scoring stream, the join back),
+    # so the input is checkpointed with its text. Tied (rounded) scores
+    # gate as a block (filter_by_quantile), so the cut is
+    # order-deterministic; docs with < 2 tokens have no score and pass.
+    if ppl_keep < 1.0:
+        d = d.localCheckpoint()
+        ref = d
+        if ppl_ref is not None:
+            ref = ppl_ref.select(
+                "text", F.monotonically_increasing_id().alias("doc_id")
+            )
+        ppl = perplexity(d, train_bigram_lm(ref)).select(
+            F.col("id").alias("doc_id"), "ppl"
+        )
+        scored = ppl.filter(F.col("ppl").isNotNull())
+        gated = filter_by_quantile(
+            scored.withColumn("neg_ppl", -F.col("ppl")),
+            q=1.0 - ppl_keep,
+            score_col="neg_ppl",
+            id_col="doc_id",
+        )
+        unscored = ppl.filter(F.col("ppl").isNull())
+        ids = gated.select("doc_id").union(unscored.select("doc_id"))
+        d = keep("after_perplexity_gate", d, ids)
+
+    # 8. benchmark decontamination
+    if benchmark is not None:
+        dec = decontaminate(d, benchmark)
+        clean = dec.filter(~F.col("contaminated"))
+        d = keep(
+            "after_decontamination", d, clean.select(F.col("id").alias("doc_id"))
+        )
+
+    # 9. deterministic sample; at rate 1 it keeps every doc (u < 1)
+    d = sample_fraction(d, sample_rate, seed=sample_seed)
+    if sample_rate < 1.0:
+        stages["after_sampling"] = d
+    ivf_cells = ivf_sink[0] if ivf_sink else None
+    return Curation(d, stages, lsh_sink[0], ivf_cells, uncovered)
+
+
 def curation_funnel(
     docs: DataFrame,
     near_dup_threshold: float = 0.95,
@@ -554,88 +787,19 @@ def curation_funnel(
     sample_rate: float = 0.5,
     sample_seed: str = "curate",
 ) -> DataFrame:
-    """The composed curation funnel as ONE declarative DataFrame — the
-    oracle-able core of jobs/curate_corpus.py (stages 1-4 + 7): exact
-    dedup → MinHash near-dup canonicals → C4 line dedup → language +
-    quality gates → deterministic sample. Each stage is individually
-    hash-verified elsewhere; this entry hash-proves their COMPOSITION
-    (each stage consuming the previous survivors, the rewrite text
-    flowing into the gates and the final content sha).
+    """The oracle projection of ``curate_docs`` with its optional stages
+    off: exact dedup → MinHash near-dup canonicals → C4 line dedup →
+    language + quality gates → deterministic sample. Each stage is
+    individually hash-verified elsewhere; this entry hash-proves their
+    COMPOSITION (each stage consuming the previous survivors, the
+    rewritten text flowing into the gates and the final content sha).
 
     Output per surviving doc: (doc_id, content_sha = sha256 of the
-    line-deduped text, pred_lang, quality, u — the sampling draw).
-
-    Stage boundaries localCheckpoint — but ID-SIZED frames only (r5):
-    the dedup stages reference their input 3-4× each, so composing them
-    nests the upstream plan multiplicatively (the measured 542 MB
-    plan-string lesson in jobs/curate_corpus.py). Checkpointing the
-    full text frame at every boundary bounded the plan but serialized
-    the whole corpus to local disk 3× — a non-scaling IO component the
-    1→4-core protocol measured at ~90 s/leg (37 % of the 4-core wall,
-    efficiency 0.723). Checkpointing only the SURVIVOR-ID sets keeps
-    the plan linear for the same reason (each downstream reference of
-    the stage frame embeds one constant-size scan+join subplan, never
-    the upstream dedup pipeline) while the re-scans of the parquet
-    source are distributed work that scales with cores. The one
-    text-sized checkpoint kept is the stage-3 rewrite map — dedup_lines
-    is the costliest stage and is referenced 3× downstream."""
-    from graphiti_spark.operators.dedup_docs import (
-        canonical_docs,
-        exact_dedup,
-        minhash_near_dup,
-    )
-    from graphiti_spark.operators.sampling import sample_fraction
-    from graphiti_spark.operators.textstats import language_id, quality_score
-
-    # 1. exact dedup: the canonical copy survives (checkpoint = id set)
-    ex = exact_dedup(docs)
-    ids1 = (
-        ex.filter(F.col("id") == F.col("canonical_id"))
-        .select(F.col("id").alias("doc_id"))
-        .localCheckpoint()
-    )
-    d = docs.join(ids1, "doc_id")
-
-    # 2. near-dup canonicals over the survivors (checkpoint = id set)
-    canon = canonical_docs(
-        d, minhash_near_dup(d, threshold=near_dup_threshold, mode="word")
-    )
-    ids2 = (
-        canon.filter(F.col("id") == F.col("canonical_id"))
-        .select(F.col("id").alias("doc_id"))
-        .localCheckpoint()
-    )
-    d = d.join(ids2, "doc_id")
-
-    # 3. corpus-level line dedup; docs emptied by the rewrite drop out
-    dl = dedup_lines(d)
-    d = (
-        d.drop("text")
-        .join(
-            dl.select(
-                F.col("id").alias("doc_id"),
-                F.col("text_dedup").alias("text"),
-            ),
-            "doc_id",
-        )
-        .filter(F.length("text") > 0)
-        .localCheckpoint()
-    )
-
-    # 4. language + quality gates over the REWRITTEN text
-    lang = language_id(d).select(F.col("id").alias("doc_id"), "pred_lang")
-    qual = quality_score(d).select(
-        F.col("id").alias("doc_id"), F.col("score").alias("quality")
-    )
-    d = (
-        d.join(lang, "doc_id")
-        .join(qual, "doc_id")
-        .filter(F.col("pred_lang").isin(*langs))
-        .filter(F.col("quality") >= min_quality)
-    )
-
-    # 7. deterministic sample (stage numbering mirrors the job)
-    d = sample_fraction(d, sample_rate, seed=sample_seed)
+    line-deduped text, pred_lang, quality, u — the sampling draw)."""
+    d = curate_docs(
+        docs, near_dup_threshold, langs=langs, min_quality=min_quality,
+        sample_rate=sample_rate, sample_seed=sample_seed,
+    ).docs
     return d.select(
         "doc_id",
         F.sha2(F.col("text").cast("binary"), 256).alias("content_sha"),

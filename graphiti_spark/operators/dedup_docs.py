@@ -984,6 +984,39 @@ def semantic_dedup(
     )
 
 
+def semantic_dedup_docs(
+    docs: DataFrame,
+    embeddings: DataFrame,
+    dropped_sink: list | None = None,
+    **kw,
+) -> tuple[DataFrame, DataFrame]:
+    """SemDeDup over (doc_id, ...) docs with caller-supplied (vec_id,
+    embedding) rows → (kept docs, uncovered docs).
+
+    Only semantic duplicates are dropped: a doc with no embedding row
+    (or a null embedding) cannot be compared, so it survives and is
+    returned in ``uncovered`` for the stats, never lost silently.
+    ``kw`` goes to ``semantic_dedup``.
+    """
+    embs = (
+        embeddings.select("vec_id", "embedding")
+        .filter(F.col("embedding").isNotNull())
+        .join(docs.select(F.col("doc_id").alias("vec_id")), "vec_id")
+    )
+    sem = semantic_dedup(embs, dropped_sink=dropped_sink, **kw)
+    kept = docs.join(
+        sem.filter(F.col("id") != F.col("canonical_id")).select(
+            F.col("id").alias("doc_id")
+        ),
+        "doc_id",
+        "left_anti",
+    )
+    uncovered = docs.join(
+        embs.select(F.col("vec_id").alias("doc_id")), "doc_id", "left_anti"
+    )
+    return kept, uncovered
+
+
 def dup_rate_by_group(
     canon: DataFrame, group_col: str = "host", id_col: str = "id"
 ) -> DataFrame:

@@ -372,10 +372,10 @@ def test_semantic_decontaminate_empty_benchmark_returns_clean_rows(spark):
 
 
 def test_curate_semantic_dedup_keeps_docs_without_embeddings(spark, tmp_path):
-    """The curate job's SemDeDup stage drops semantic duplicates only: a
+    """The curation SemDeDup stage drops semantic duplicates only: a
     doc with no embedding row (or a null embedding) survives and is
     counted as uncovered, never lost in the join."""
-    from jobs.curate_corpus import semantic_dedup_docs
+    from graphiti_spark.operators.dedup_docs import semantic_dedup_docs
 
     docs = spark.createDataFrame(
         [(i, f"doc {i}") for i in range(1, 7)], "doc_id long, text string"

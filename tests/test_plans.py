@@ -651,3 +651,28 @@ def test_duplicate_pairs_plan_string_bounded(sf_entities):
 
     text = duplicate_pairs(sf_entities)._jdf.queryExecution().toString()
     assert len(re.sub(r"#\d+", "#", text)) < SAVED_PLAN_MAX_CHARS
+
+
+def test_full_curation_plan_string_bounded(spark):
+    """The composition with every optional stage on plans over its stage
+    checkpoints: its survivors render ~5 k characters, far under the
+    100 k render cap (session.py) that truncation would hide. Before the
+    perplexity stage was cut, the curate job rendered a 542 MB plan."""
+    import re
+
+    from graphiti_spark.operators.curation import curate_docs
+
+    cur = curate_docs(
+        spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text"),
+        near_dup_threshold=0.9,
+        embeddings=spark.read.parquet(f"{SF}/embeddings.parquet"),
+        semantic_max_cell=100_000,
+        span_k=8,
+        max_dup_line_frac=0.5,
+        max_top2_frac=0.5,
+        ppl_keep=0.8,
+        benchmark=spark.createDataFrame([("a benchmark passage",)], "text string"),
+        sample_rate=0.8,
+    )
+    text = cur.docs._jdf.queryExecution().toString()
+    assert len(re.sub(r"#\d+", "#", text)) < SAVED_PLAN_MAX_CHARS
