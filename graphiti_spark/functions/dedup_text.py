@@ -158,6 +158,20 @@ def jaccard_col(a: Column, b: Column) -> Column:
     )
 
 
+def jaccard_size_bound(a: Column, b: Column, t: float) -> Column:
+    """Length filter (ICDE 2022, PAPERS.md): a necessary condition of
+    ``round(jaccard_col(a, b), 4) >= t`` and of ``jaccard_col(a, b) >= t``
+    read off the two sizes alone. J ≤ min/max because |A∩B| ≤ min and
+    |A∪B| ≥ max, and rounding is monotone, so no pair either verify
+    keeps is rejected. Like ``jaccard_col`` it assumes distinct
+    elements; two empty arrays (J = 1) pass."""
+    lo = F.least(F.size(a), F.size(b))
+    hi = F.greatest(F.size(a), F.size(b))
+    return F.when(hi == 0, F.lit(True)).otherwise(
+        F.round(lo.cast("double") / hi.cast("double"), 4) >= t
+    )
+
+
 def entropy_gate_col(normalized_fuzzy: Column) -> Column:
     """Native entropy gate: length/token-count pre-check + Shannon entropy
     computed via aggregate over per-character counts."""

@@ -11,7 +11,7 @@ loses recall, and the ``dropped`` frame (*keys, size) says how much.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -31,12 +31,19 @@ def blocked_pairs(
     id_col: str,
     payload: list[str],
     max_group: int | None = None,
+    prefilter: Column | None = None,
 ) -> tuple[DataFrame, DataFrame | None]:
     """(pairs, dropped): every id pair sharing a kept key, once.
 
     ``pairs`` has columns a_<id_col>, a_<payload>…, b_<id_col>,
     b_<payload>… with a < b on the id. ``dropped`` is the
     ``capped_groups`` metrics frame, or None when ``max_group`` is None.
+
+    ``prefilter`` is a predicate over the a_*/b_* columns that must be a
+    necessary condition of the caller's verify: it is applied to the
+    joined rows before the per-pair dedup, so a pair it rejects is never
+    deduped or verified (a filter placed after the dedup cannot be
+    pushed below its aggregate).
 
     ``rows`` is read three times (the group-size aggregate and both join
     sides; twice without a cap). When the rows come out of a UDF, pass
@@ -51,11 +58,12 @@ def blocked_pairs(
     def side(p):
         return rows.select(*keys, *[F.col(c).alias(f"{p}_{c}") for c in cols])
 
-    pairs = (
-        side("a")
-        .join(side("b"), keys)
-        .filter(F.col(f"a_{id_col}") < F.col(f"b_{id_col}"))
-        .select(*[f"{p}_{c}" for p in "ab" for c in cols])
-        .dropDuplicates([f"a_{id_col}", f"b_{id_col}"])
+    joined = side("a").join(side("b"), keys).filter(
+        F.col(f"a_{id_col}") < F.col(f"b_{id_col}")
+    )
+    if prefilter is not None:
+        joined = joined.filter(prefilter)
+    pairs = joined.select(*[f"{p}_{c}" for p in "ab" for c in cols]).dropDuplicates(
+        [f"a_{id_col}", f"b_{id_col}"]
     )
     return pairs, dropped

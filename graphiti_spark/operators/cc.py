@@ -60,10 +60,17 @@ GATE = 1_000_000  # symmetrized edge rows; sized in the module docstring
 
 
 def _symmetrize(pairs: DataFrame) -> DataFrame:
-    forward = pairs.select(F.col("src").alias("u"), F.col("dst").alias("v"))
+    """(src, dst) → the distinct directed edges (u, v) and (v, u) of
+    every non-loop pair. One generator emits both directions, so the
+    input plan is read once; a union of the pairs with their reversal
+    would run the whole pair plan (join, dedup, verify) twice."""
+    both = F.array(
+        F.struct(F.col("src").alias("u"), F.col("dst").alias("v")),
+        F.struct(F.col("dst").alias("u"), F.col("src").alias("v")),
+    )
     return (
-        forward.union(forward.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .filter(F.col("u") != F.col("v"))
+        pairs.filter(F.col("src") != F.col("dst"))
+        .select(F.inline(both))
         .distinct()
     )
 
@@ -149,7 +156,8 @@ def connected_components(
     # Materialize the (possibly expensive) pair plan EXACTLY ONCE before
     # anything reads it: probing an unpersisted caller's pair pipeline
     # and then checkpointing it evaluated that pipeline twice (the
-    # curation funnel measured its 83 s MinHash stage 2x).
+    # curation funnel measured its 83 s MinHash stage 2x). _symmetrize
+    # reads its input once, so the checkpoint runs the plan once.
     edges = _symmetrize(
         pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     ).localCheckpoint(eager=True)

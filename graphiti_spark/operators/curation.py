@@ -640,7 +640,8 @@ def curate_docs(
          capped at ``semantic_max_cell`` (None = no cap)
       4. C4 corpus line dedup (rewrites the text)
       5. exact-substring span dedup of ≥ ``span_k`` tokens (0 = off)
-      6. language + quality gates; the repetition gate when a
+      6. language + quality gates, two per-row columns computed in one
+         projection; the repetition gate when a
          ``max_dup_line_frac`` / ``max_top2_frac`` cap is set
       7. perplexity gate keeping the ``ppl_keep`` fraction (1.0 = off)
          with the lowest bigram-LM perplexity; the LM trains on
@@ -669,8 +670,8 @@ def curate_docs(
         sample_fraction,
     )
     from graphiti_spark.operators.textstats import (
-        language_id,
-        quality_score,
+        pred_lang_col,
+        quality_score_col,
         repetition_stats,
     )
 
@@ -717,12 +718,13 @@ def curate_docs(
         d = _rewritten(d, drop_dup_spans(d, k=span_k))
         stages["after_span_dedup"] = d
 
-    # 6. gates over the REWRITTEN text
-    lang = language_id(d).select(F.col("id").alias("doc_id"), "pred_lang")
-    qual = quality_score(d).select(
-        F.col("id").alias("doc_id"), F.col("score").alias("quality")
+    # 6. gates over the REWRITTEN text: per-row columns, so one
+    # projection of d, never a join of d against itself
+    gated = d.select(
+        "*",
+        pred_lang_col(F.col("text")).alias("pred_lang"),
+        quality_score_col(F.col("text")).alias("quality"),
     )
-    gated = d.join(lang, "doc_id").join(qual, "doc_id")
     caps = {"dup_line_frac": max_dup_line_frac, "top2_char_frac": max_top2_frac}
     if any(cap is not None for cap in caps.values()):
         # id-sized checkpoint: the lazy repetition plan would push the

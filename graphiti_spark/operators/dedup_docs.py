@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from graphiti_spark.functions.dedup_text import (
     jaccard_col,
+    jaccard_size_bound,
     lsh_band_keys_col,
     minhash_signature_udf,
 )
@@ -126,12 +127,17 @@ def minhash_near_dup(
     ``dropped_sink``: optional list; if given, a (band_idx, band_key,
     bucket_n) metrics frame of capped (recall-losing) buckets is
     appended — never drop silently."""
+    # blocked_pairs reads its rows three times: checkpoint them so the
+    # MinHash UDF runs once per doc
     pairs, dropped = blocked_pairs(
-        minhash_bands(docs, id_col, text_col, mode),
+        minhash_bands(docs, id_col, text_col, mode).localCheckpoint(),
         BAND_KEYS,
         "id",
         ["shingles"],
         max_bucket,
+        prefilter=jaccard_size_bound(
+            F.col("a_shingles"), F.col("b_shingles"), threshold
+        ),
     )
     if dropped_sink is not None:
         dropped_sink.append(dropped)
@@ -249,6 +255,7 @@ def minhash_near_dup_incremental(
             sh.select(F.col("id").alias("b_id"), F.col("shingles").alias("b_sh")),
             "b_id",
         )
+        .filter(jaccard_size_bound(F.col("a_sh"), F.col("b_sh"), threshold))
     )
     return (
         pairs.withColumn(

@@ -17,7 +17,9 @@ Batch formulation (replaces the per-name loop):
      blocking.blocked_pairs on (group_id, band_idx, band_key) = THE
      blocking shuffle (reference's lsh_buckets,
      dedup_helpers.py:117-128,170-195).
-  4. candidate pairs, one pass: native Jaccard ≥ 0.5 → embed both names
+  4. candidate pairs, pruned before the pair dedup by the shingle-count
+     length filter of Jaccard ≥ 0.5, then in one pass: native Jaccard
+     ≥ 0.5 → embed both names
      → accept Jaccard ≥ 0.9 (D7) or embedding cosine ≥ 0.95 (D8').
   5. accepted duplicate pairs → connected components (min-uuid canonical,
      D13/D14) → uuid_map(alias → canonical).
@@ -44,6 +46,7 @@ from graphiti_spark.config import (
 from graphiti_spark.functions.dedup_text import (
     entropy_gate_col,
     jaccard_col,
+    jaccard_size_bound,
     lsh_band_keys_col,
     minhash_signature_udf,
     normalize_name_for_fuzzy_col,
@@ -56,6 +59,15 @@ from graphiti_spark.operators.blocking import blocked_pairs, capped_groups
 # Guard against pathological LSH buckets (all-identical band values).
 MAX_BUCKET_SIZE = 1000
 BAND_KEYS = ["group_id", "band_idx", "band_key"]
+CANDIDATE_JACCARD = 0.5  # below it no pair is embedded or accepted
+
+
+def _size_bound():
+    """The length filter of the candidate Jaccard floor: a pair it
+    rejects cannot reach Jaccard ≥ 0.5."""
+    return jaccard_size_bound(
+        F.col("a_shingles"), F.col("b_shingles"), CANDIDATE_JACCARD
+    )
 
 
 def extracted_entities(mentions: DataFrame) -> DataFrame:
@@ -119,7 +131,7 @@ def _score_candidate_pairs(pairs: DataFrame) -> DataFrame:
     cos = cosine_col(embed_udf(F.col("a_name")), embed_udf(F.col("b_name")))
     return (
         pairs.select("a_uuid", "a_name", "b_uuid", "b_name", jaccard.alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.5)
+        .filter(F.col("jaccard") >= CANDIDATE_JACCARD)
         .filter(
             (F.col("jaccard") >= FUZZY_JACCARD_THRESHOLD)
             | (cos >= EMBED_COSINE_THRESHOLD)
@@ -145,6 +157,7 @@ def duplicate_pairs(
         "uuid",
         ["name", "shingles"],
         MAX_BUCKET_SIZE,
+        prefilter=_size_bound(),
     )
     if dropped_sink is not None:
         dropped_sink.append(dropped)
@@ -187,6 +200,7 @@ def duplicate_pairs_between(
     pairs = (
         left.join(right, BAND_KEYS)
         .filter(F.col("a_uuid") != F.col("b_uuid"))
+        .filter(_size_bound())
         .select(
             F.least("a_uuid", "b_uuid").alias("lo"),
             F.greatest("a_uuid", "b_uuid").alias("hi"),

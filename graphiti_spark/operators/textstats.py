@@ -56,10 +56,15 @@ def _lang_best(text_col):
     return best
 
 
-def pred_lang_col(text_col):
-    """Per-row predicted language code ('und' on zero marker hits)."""
-    best = _lang_best(text_col)
+def _lang_of(best):
     return F.when(best["hits"] > 0, best["lang"]).otherwise(F.lit("und"))
+
+
+def pred_lang_col(text_col):
+    """Per-row predicted language code ('und' on zero marker hits) — the
+    expression behind language_id, the curation gate and the streaming
+    monitor."""
+    return _lang_of(_lang_best(text_col))
 
 
 def language_id(
@@ -71,9 +76,7 @@ def language_id(
     best = _lang_best(F.col(text_col))
     return docs.select(
         F.col(id_col).alias("id"),
-        F.when(best["hits"] > 0, best["lang"]).otherwise(F.lit("und")).alias(
-            "pred_lang"
-        ),
+        _lang_of(best).alias("pred_lang"),
         best["hits"].cast("long").alias("n_hits"),
     )
 
@@ -142,8 +145,9 @@ def _quality_gates(f: dict):
 
 def quality_score_col(text_col):
     """Per-row composite quality score (the four 0.25 gates, rounded
-    4 dp) — the shared expression behind quality_score and the
-    streaming monitor. Same arithmetic as the docs_quality oracle."""
+    4 dp) — the shared expression behind quality_score, the curation
+    gate and the streaming monitor. Same arithmetic as the docs_quality
+    oracle."""
     return _quality_gates(_quality_features(text_col))
 
 

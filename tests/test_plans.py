@@ -676,3 +676,78 @@ def test_full_curation_plan_string_bounded(spark):
     )
     text = cur.docs._jdf.queryExecution().toString()
     assert len(re.sub(r"#\d+", "#", text)) < SAVED_PLAN_MAX_CHARS
+
+
+def _sf_docs(spark):
+    return spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
+
+
+def test_minhash_near_dup_reads_materialized_bands(spark):
+    """minhash_near_dup hands blocked_pairs checkpointed band rows, so
+    its own plan runs no MinHash (four copies of the UDF, two executed,
+    when the band rows went in lazily)."""
+    from graphiti_spark.operators.dedup_docs import minhash_near_dup
+
+    assert _minhash_evals(minhash_near_dup(_sf_docs(spark))) == 0
+
+
+def test_symmetrize_reads_its_input_once(spark):
+    """Both edge directions come from one generator over the input: a
+    union of the pairs with their reversal ran the caller's whole pair
+    plan twice."""
+    from graphiti_spark.operators.cc import _symmetrize
+
+    x = spark.read.parquet(f"{SF}/documents.parquet").select(
+        F.col("doc_id").cast("string").alias("src"), F.col("source").alias("dst")
+    )
+    plan = _symmetrize(x)._jdf.queryExecution().optimizedPlan().toString()
+    assert "Union" not in plan
+    assert plan.count("Relation [") == 1, plan
+
+
+def _leaves(node, out):
+    kids = node.children()
+    if kids.size() == 0:
+        out.append(node)
+    for i in range(kids.size()):
+        _leaves(kids.apply(i), out)
+    return out
+
+
+def test_curation_funnel_gates_in_one_projection(spark):
+    """The gate stage is per-row columns of the line-dedup checkpoint,
+    not joins of that checkpoint against its own projections, and the
+    funnel's plan string shrinks with it (80,622 characters with
+    expression ids stripped when each gate was joined back)."""
+    import re
+
+    from graphiti_spark.operators.curation import curation_funnel
+
+    qe = curation_funnel(_sf_docs(spark))._jdf.queryExecution()
+    assert len(re.sub(r"#\d+", "#", qe.toString())) < 72_000
+
+    def line_checkpoints(node):
+        """RDD ids of the (doc_id, text) checkpoint scans under node."""
+        ids = set()
+        for leaf in _leaves(node, []):
+            out = leaf.output()
+            names = [out.apply(i).name() for i in range(out.size())]
+            if leaf.nodeName() == "Scan ExistingRDD" and names == ["doc_id", "text"]:
+                ids.add(leaf.rdd().id())
+        return ids
+
+    self_joins = []
+
+    def walk(node):
+        kids = node.children()
+        if "Join" in node.nodeName() and (
+            line_checkpoints(kids.apply(0)) & line_checkpoints(kids.apply(1))
+        ):
+            self_joins.append(node.nodeName())
+        for i in range(kids.size()):
+            walk(kids.apply(i))
+
+    plan = qe.sparkPlan()
+    assert line_checkpoints(plan), "expected a line-dedup checkpoint scan"
+    walk(plan)
+    assert not self_joins
