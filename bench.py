@@ -149,6 +149,8 @@ def run_bench(
     warm.select(make_embed_udf()(F.col("s"))).count()
 
     timings: dict[str, float] = {}
+    sc = spark.sparkContext
+    sc.setJobGroup("bench", "bench")  # the timed region's Spark jobs
     t_total0 = time.monotonic()
     if fast:
         from graphiti_spark.config import BATCH_PERSIST_STAGES
@@ -156,15 +158,14 @@ def run_bench(
         cfg = RunConfig(persist_stages=BATCH_PERSIST_STAGES)
     else:
         # Materialize exactly the reused subtrees (r3, VERDICT #6): the
-        # dedup chain (consumed by the eager CC fixpoint AND three final
-        # tables), mentions (entities + mention_edges) and edges_merged
-        # (edges + nodes). Blanket materialization measured slower:
-        # holding the wide intermediate rows is memory pressure, not
-        # reuse.
+        # dedup chain (consumed by the eager CC AND the final tables),
+        # mentions (entities + mention_edges) and edges_merged (edges +
+        # nodes). Blanket materialization measured slower: holding the
+        # wide intermediate rows is memory pressure, not reuse.
         cfg = RunConfig(
             persist_stages=frozenset(
                 {"episodes", "token_stream", "mentions", "entities",
-                 "pairs", "uuid_map", "edges_merged"}
+                 "pairs", "edges_merged"}
             )
         )
     t0 = time.monotonic()
@@ -210,6 +211,7 @@ def run_bench(
             counts[name] = out[name].count()
             timings[name] = round(time.monotonic() - t0, 3)
     total = round(time.monotonic() - t_total0, 3)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("bench"))
 
     # dropped-LSH-bucket observability: capped buckets lose dedup recall
     # and must never vanish silently (0 on healthy corpora)
@@ -227,6 +229,7 @@ def run_bench(
         "rows": counts,
         "wall_sec": total,
         "cores": sc_cores,
+        "jobs": jobs,
         "dropped_lsh_buckets": dropped,
     }
     if touch_rate is not None:

@@ -141,9 +141,10 @@ class RunConfig:
     checkpoint_dir: str | None = None   # enables lineage + stage resume
     # Which stages to materialize when no checkpoint_dir is set; each
     # selected stage is computed once by an eager localCheckpoint and
-    # later stages read it without its lineage. True = all
-    # (interactive/bench mode); False = none; a set of stage names =
-    # selective (single-output batch runs cut only at the small,
+    # later stages read it without its lineage. True = every stage that
+    # a later stage reads (a stage with a single reader stays lazy and
+    # fuses into that reader's job); False = none; a set of stage names
+    # = exactly those (single-output batch runs cut only at the small,
     # heavily-reused dedup subtree and let Catalyst fuse the big row
     # streams into deep jobs).
     persist_stages: bool | frozenset = True
@@ -152,8 +153,9 @@ class RunConfig:
 
 # The small, reused subtree worth materializing in single-output batch runs:
 # the token stream feeds both extraction outputs (one posexplode pass);
-# entities/pairs/uuid_map are tiny and consumed by several joins (incl.
-# the eager CC fixpoint).
+# entities/pairs are tiny and consumed by several joins (incl. the eager
+# CC). uuid_map is not in it: the remaps read CC's alias map, and the
+# identity-padded map has no reader inside the pipeline.
 BATCH_PERSIST_STAGES = frozenset(
-    {"episodes", "token_stream", "entities", "pairs", "uuid_map"}
+    {"episodes", "token_stream", "entities", "pairs"}
 )

@@ -24,6 +24,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from graphiti_spark.session import job_description
+
 GRAPH_TABLES = (
     "nodes",
     "edges",
@@ -61,7 +63,8 @@ def save_graph(
     partitioned by group_id (when present), sorted by uuid within
     partitions. ``tables``/``partition_cols`` generalize the same
     versioned-state layout to other table families (the corpus dedup
-    state partitions its LSH index by band)."""
+    state partitions its LSH index by band). The jobs of each write
+    carry the description ``write:<table>``."""
     partition_cols = partition_cols or {}
     written: dict[str, str] = {}
     for name in tables:
@@ -69,35 +72,36 @@ def save_graph(
         if df is None:
             continue
         target = os.path.join(path, name)
-        if "group_id" in df.columns:
-            # uuid sort = point-lookup min/max skipping; the postings
-            # table sorts by term instead (query terms prune row groups)
-            sort_col = (
-                "uuid" if "uuid" in df.columns
-                else ("term" if "term" in df.columns else df.columns[0])
-            )
-            (
-                # cluster rows by the partition column BEFORE the
-                # partitioned write: otherwise every write task opens a
-                # file per group it happens to hold (tasks × groups small
-                # files — the classic partitionBy fan-out). AQE rebalances
-                # skewed groups.
-                df.repartition("group_id")
-                .sortWithinPartitions(sort_col)
-                .write.mode("overwrite")
-                .partitionBy("group_id")
-                .parquet(target)
-            )
-        elif name in partition_cols:
-            pcol = partition_cols[name]
-            (
-                df.repartition(pcol)
-                .write.mode("overwrite")
-                .partitionBy(pcol)
-                .parquet(target)
-            )
-        else:  # e.g. pairs(src, dst)
-            df.write.mode("overwrite").parquet(target)
+        with job_description(df.sparkSession, f"write:{name}"):
+            if "group_id" in df.columns:
+                # uuid sort = point-lookup min/max skipping; the postings
+                # table sorts by term instead (query terms prune row groups)
+                sort_col = (
+                    "uuid" if "uuid" in df.columns
+                    else ("term" if "term" in df.columns else df.columns[0])
+                )
+                (
+                    # cluster rows by the partition column BEFORE the
+                    # partitioned write: otherwise every write task opens a
+                    # file per group it happens to hold (tasks × groups small
+                    # files — the classic partitionBy fan-out). AQE rebalances
+                    # skewed groups.
+                    df.repartition("group_id")
+                    .sortWithinPartitions(sort_col)
+                    .write.mode("overwrite")
+                    .partitionBy("group_id")
+                    .parquet(target)
+                )
+            elif name in partition_cols:
+                pcol = partition_cols[name]
+                (
+                    df.repartition(pcol)
+                    .write.mode("overwrite")
+                    .partitionBy(pcol)
+                    .parquet(target)
+                )
+            else:  # e.g. pairs(src, dst)
+                df.write.mode("overwrite").parquet(target)
         written[name] = target
     return written
 

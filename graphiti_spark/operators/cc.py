@@ -10,7 +10,9 @@ checkpointed once and then read by one bounded collect:
 * at most ``GATE`` edge rows — the driver regime. The collected Arrow
   table runs the reference's own algorithm, min-root union-find with
   path compression, and the mapping returns as a local relation
-  (``LocalTableScan``: no Python workers, a short plan). This is the
+  (``LocalTableScan``: no Python workers, a short plan) of at most
+  ``GATE`` rows, one per node. Callers broadcast it without counting
+  it (``DataFrame.isLocal()`` tells the regimes apart). This is the
   common case: the graphs this engine canonicalizes (near-dup doc
   pairs, entity duplicate pairs) have hundreds to thousands of edges,
   where the distributed fixpoint's cost is its per-job floor, not data.
@@ -167,11 +169,13 @@ def connected_components(
     # partitions incrementally, one job per round).
     head = edges.limit(GATE + 1).toArrow()
     if head.num_rows == 0:
-        # JVM-side empty frame — createDataFrame([]) builds a Python-RDD
-        # plan whose 32 empty tasks each pay Python-worker spin-up.
-        return spark.range(0).select(
-            F.col("id").cast("string").alias("uuid"),
-            F.col("id").cast("string").alias("canonical_uuid"),
+        # An empty local relation, not spark.range(0): Catalyst proves it
+        # empty at plan time, so a caller's left join onto the mapping
+        # plans away (a Range(0) side still runs its broadcast job). The
+        # Arrow path builds no Python-RDD plan, unlike createDataFrame([]).
+        empty = pa.array([], pa.string())
+        return spark.createDataFrame(
+            pa.table({"uuid": empty, "canonical_uuid": empty})
         )
     if head.num_rows <= GATE:
         return _driver_components(spark, head)

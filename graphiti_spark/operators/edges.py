@@ -129,10 +129,12 @@ def resolve_edge_pointers(
     """Rewrite edge endpoints through the canonical map (D15): two left
     joins + coalesce(canonical, original).
 
-    Broadcast is SIZE-GATED, never unconditional: the map covers every
-    distinct entity, which at web scale exceeds driver memory. The
-    pipeline passes ``map_is_small`` from the map's measured row count
-    (config.BROADCAST_MAP_MAX_ROWS); without that knowledge (None) the
+    Broadcast is SIZE-GATED, never unconditional: at web scale the map
+    exceeds driver memory. The batch pipeline remaps through CC's alias
+    map and passes ``map_is_small`` when CC's bounded collect took the
+    driver regime (at most cc.GATE rows, no count job); the incremental
+    path passes it from its delta map's row count
+    (config.BROADCAST_MAP_MAX_ROWS). Without that knowledge (None) the
     decision is left to Catalyst statistics + AQE, which falls back to
     shuffle joins keyed on the endpoint uuid (uniform sha256 — no hot
     key). Asserted both ways in tests/test_plans.py. The explicit hint

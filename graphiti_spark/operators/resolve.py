@@ -22,7 +22,8 @@ Batch formulation (replaces the per-name loop):
      ≥ 0.5 → embed both names
      → accept Jaccard ≥ 0.9 (D7) or embedding cosine ≥ 0.95 (D8').
   5. accepted duplicate pairs → connected components (min-uuid canonical,
-     D13/D14) → uuid_map(alias → canonical).
+     D13/D14) → alias map (the uuids in a pair) → uuid_map (every
+     entity, identity rows included).
 
 Scale notes: everything after step 1 operates on DISTINCT names — orders
 of magnitude smaller than the mention stream. The LSH band join is the
@@ -236,7 +237,12 @@ def canonical_uuid_map(entities: DataFrame, pairs: DataFrame) -> DataFrame:
     uuid_map contract (bulk_utils.py:498-535, min-uuid root)."""
     from graphiti_spark.operators.cc import connected_components
 
-    cc = connected_components(pairs)
-    return entities.select("uuid").join(cc, "uuid", "left").select(
+    return full_uuid_map(entities, connected_components(pairs))
+
+
+def full_uuid_map(entities: DataFrame, aliases: DataFrame) -> DataFrame:
+    """CC's alias map (uuid → canonical_uuid for the uuids in a pair)
+    padded with an identity row for every other entity."""
+    return entities.select("uuid").join(aliases, "uuid", "left").select(
         "uuid", F.coalesce("canonical_uuid", "uuid").alias("canonical_uuid")
     )

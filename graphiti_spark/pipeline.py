@@ -6,6 +6,16 @@ This is the Spark-first reformulation of the reference's
 windows → materialize. Each stage is a declarative DataFrame program;
 stages can be checkpointed/resumed via lineage.materialize_stage.
 
+Without a checkpoint dir, a stage is cut (eager localCheckpoint, one
+Spark job) only when a later stage reads it: episodes, token_stream,
+mentions, entities, pairs, edges_merged and nodes are each read two or
+more times. pages, triples, uuid_map, edges and mention_edges have one
+reader each and stay lazy, so they fuse into the job of that reader
+(for the last three: the caller's write). The remap joins read CC's
+alias map (only the aliases that are in a duplicate pair), not the
+identity-padded uuid_map; when nothing merges that map is an empty
+local relation and Catalyst plans the joins away.
+
 Stage map (SURVEY.md §2 operator ids):
   pages          S1/S2 scan + E10 text extraction (pandas UDF, byte-identical)
   episodes       EpisodicNode rows, uuid = sha256(url), valid_at = warc_ts
@@ -13,6 +23,7 @@ Stage map (SURVEY.md §2 operator ids):
   entities       D1 exact canonicalization over distinct names
   pairs          D2-D8' LSH blocking + Jaccard + embedding fallback
   uuid_map       D13/D14 connected components, min-uuid canonical
+                 (saved with identity rows; the remaps read CC's aliases)
   nodes          canonical EntityNode rows + E8 summary + E9 embeddings
   edges          D15 remap + D17 merge + T1-T3 invalidation windows
   mention_edges  MENTIONS provenance edges
@@ -31,13 +42,15 @@ from graphiti_spark.operators.edges import (
     build_mention_edges,
     triples_to_edges,
 )
+from graphiti_spark.operators.cc import connected_components
 from graphiti_spark.operators.resolve import (
-    canonical_uuid_map,
     duplicate_pairs,
     extracted_entities,
+    full_uuid_map,
 )
 from graphiti_spark.operators.temporal import invalidate_edges
 from graphiti_spark.functions.typing import labels_col
+from graphiti_spark.session import job_description
 from graphiti_spark.sources.pages import load_pages, pages_to_episodes
 from graphiti_spark.textnorm import truncate_at_sentence_col
 
@@ -54,19 +67,21 @@ def build_nodes(
 ) -> DataFrame:
     """Canonical EntityNode table (E8 summary + E9 embeddings).
 
-    Canonical identity: entities remapped through uuid_map; the surviving
-    row is the canonical uuid's own (name, group); mention counts of all
-    aliases are summed into the canonical node.
+    Canonical identity: entities remapped through uuid_map (the full map
+    or only CC's aliases: a uuid missing from it maps to itself); the
+    surviving row is the canonical uuid's own (name, group); mention
+    counts of all aliases are summed into the canonical node.
     Summary (deterministic E8): the node's top SUMMARY_TOP_FACTS subject-
     facts sorted lexicographically, '. '-joined + trailing '.', sentence-
     truncated at 500 chars (reference text_utils.py:20; node_operations.py
     :544-573 replaced per SURVEY.md E8). Nodes without facts summarize to
     their own name.
     """
-    # Size-gated broadcast (see resolve_edge_pointers): the caller passes
-    # map_is_small from the map's MEASURED row count; at web scale the
-    # map is 10⁸⁺ rows and this stays a shuffle join on uuid (uniform
-    # sha256 key, no hot key).
+    # Size-gated broadcast (see resolve_edge_pointers): the pipeline
+    # passes map_is_small when CC's bounded collect took the driver
+    # regime (a map of at most cc.GATE rows), not from a count job;
+    # above the gate it passes None, and at web scale this stays a
+    # shuffle join on uuid (uniform sha256 key, no hot key).
     bmap = F.broadcast(uuid_map) if map_is_small else uuid_map
     remapped = (
         entities.join(bmap, "uuid", "left")
@@ -166,29 +181,37 @@ def run_pipeline_from_pages(
     cfg = cfg or RunConfig()
     ckpt, rid = cfg.checkpoint_dir, cfg.run_id
 
-    def stage(name: str, thunk, partition_by=None) -> DataFrame:
-        if ckpt is None:
-            # No checkpoint dir: cut each selected stage's lineage with an
-            # eager localCheckpoint, so later stages plan over a short
-            # LogicalRDD leaf. persist() instead would nest every upstream
-            # cached plan into each stage (megabyte plan strings) and
-            # re-run the Python UDF stages. `pages` is excluded — its html
-            # binary is bulky and consumed exactly once by `episodes`.
+    def stage(name: str, thunk, partition_by=None, reread=True) -> DataFrame:
+        """Build stage ``name``; the jobs it starts carry the description
+        ``stage:<name>``. ``reread``: a later stage reads it, so
+        ``persist_stages=True`` cuts it."""
+        with job_description(spark, f"stage:{name}"):
+            if ckpt is not None:
+                return materialize_stage(
+                    spark, thunk, ckpt, rid, name, partition_by
+                )
+            # No checkpoint dir: cut a selected stage's lineage with an
+            # eager localCheckpoint (one job), so later stages plan over
+            # a short LogicalRDD leaf. persist() instead would nest every
+            # upstream cached plan into each stage (megabyte plan
+            # strings) and re-run the Python UDF stages. A stage with one
+            # reader gains nothing from the cut: left lazy, it fuses into
+            # that reader's job.
             persist = (
-                cfg.persist_stages
+                cfg.persist_stages and reread
                 if isinstance(cfg.persist_stages, bool)
                 else name in cfg.persist_stages
             )
-            if persist and name != "pages":
-                return thunk().localCheckpoint()
-            return thunk()
-        return materialize_stage(spark, thunk, ckpt, rid, name, partition_by)
+            df = thunk()
+            return df.localCheckpoint() if persist else df
 
+    # pages: the bulky html binary, read only by episodes
     pages = stage(
         "pages",
         (lambda: pages_df) if pages_df is not None else (
             lambda: load_pages(spark, sf_dir)
         ),
+        reread=False,
     )
     episodes = stage("episodes", lambda: pages_to_episodes(pages, cfg.run_ts))
 
@@ -208,7 +231,9 @@ def run_pipeline_from_pages(
         lambda: extract_token_stream(episodes, cfg.excluded_entity_types),
     )
     mentions = stage("mentions", lambda: mentions_from_stream(token_stream))
-    triples = stage("triples", lambda: triples_from_stream(token_stream))
+    triples = stage(
+        "triples", lambda: triples_from_stream(token_stream), reread=False
+    )
 
     entities = stage("entities", lambda: extracted_entities(mentions))
     # capped-LSH-bucket metrics: a dropped bucket is silently-lost dedup
@@ -226,18 +251,25 @@ def run_pipeline_from_pages(
             F.col("id").alias("bucket_n"),
         )
     )
-    uuid_map = stage("uuid_map", lambda: canonical_uuid_map(entities, pairs))
-
-    # SIZE-GATED broadcast decision for the remap joins: the map's real
-    # row count (one job over the checkpointed/tiny map), not a blind hint.
-    from graphiti_spark.config import BROADCAST_MAP_MAX_ROWS
-
-    map_small = uuid_map.count() <= BROADCAST_MAP_MAX_ROWS
+    # D13/D14: CC's alias map holds only the uuids that are in a pair.
+    # Every remap below coalesces a missing uuid to itself, so it gives
+    # the rows the identity-padded uuid_map would; that map is built
+    # lazily, for the caller only. CC's driver regime returns a local
+    # relation of at most cc.GATE rows (sized by its own bounded
+    # collect), so the remap joins broadcast it without a count job;
+    # above the gate the planner decides (None). An empty alias map
+    # plans the joins away.
+    with job_description(spark, "cc"):
+        aliases = connected_components(pairs)
+    map_small = True if aliases.isLocal() else None
+    uuid_map = stage(
+        "uuid_map", lambda: full_uuid_map(entities, aliases), reread=False
+    )
 
     edges_merged = stage(
         "edges_merged",
         lambda: triples_to_edges(
-            triples, uuid_map, cfg.run_ts, map_is_small=map_small
+            triples, aliases, cfg.run_ts, map_is_small=map_small
         ),
         partition_by=["group_id"] if ckpt else None,
     )
@@ -255,18 +287,19 @@ def run_pipeline_from_pages(
             return invalidate_cross_predicate(edges_merged, cfg.run_ts)
         return invalidate_edges(edges_merged, cfg.run_ts)
 
-    edges = stage("edges", _edges)
+    edges = stage("edges", _edges, reread=False)
     nodes = stage(
         "nodes",
         lambda: build_nodes(
-            entities, uuid_map, edges_merged, cfg.run_ts, map_is_small=map_small
+            entities, aliases, edges_merged, cfg.run_ts, map_is_small=map_small
         ),
     )
     mention_edges = stage(
         "mention_edges",
         lambda: build_mention_edges(
-            mentions, uuid_map, cfg.run_ts, map_is_small=map_small
+            mentions, aliases, cfg.run_ts, map_is_small=map_small
         ),
+        reread=False,
     )
 
     # the materialized BM25 index over the graph tables (lazy — costs
@@ -285,6 +318,8 @@ def run_pipeline_from_pages(
         from graphiti_spark.operators.communities import build_communities
 
         comm = build_communities(nodes, edges_merged, cfg.run_ts)
+        # both tables come out of one label-propagation fixpoint, so
+        # each is cut even though only the caller reads it
         communities_out = {
             "communities": stage("communities", lambda: comm["communities"]),
             "has_member": stage("has_member", lambda: comm["has_member"]),

@@ -20,6 +20,19 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+# The generated corpus file documents.parquet (FIXTURES.md §1). Reading
+# it with this schema skips the footer-reading job that schema inference
+# starts on every load.
+DOCUMENTS_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType(), True),
+        StructField("text", StringType(), True),
+        StructField("lang", StringType(), True),
+        StructField("source", StringType(), True),
+        StructField("n_chars", LongType(), True),
+    ]
+)
+
 # Common-Crawl-style input table (BASELINE.json input_hint).
 PAGES_SCHEMA = StructType(
     [

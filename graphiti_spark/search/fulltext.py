@@ -89,30 +89,32 @@ def build_graph_postings(tables: dict[str, DataFrame]) -> DataFrame:
     """One channel-tagged postings table over every present graph table:
     (channel, group_id, id, term, tf). Built once at materialize time,
     merged incrementally on ingest; queries filter one channel (partition
-    pruning) and rehydrate via index_from_postings."""
-    parts = []
+    pruning) and rehydrate via index_from_postings.
+
+    The channels' token streams are unioned first and counted by one
+    aggregate: one shuffle, where a count per channel took one each."""
+    toks = []
     for channel, (id_col, text_cols) in CHANNEL_TEXT.items():
         df = tables.get(channel)
         if df is None:
             continue
         text = F.concat_ws(" ", *[F.col(c) for c in text_cols])
-        toks = df.select(
+        toks.append(df.select(
             F.lit(channel).alias("channel"),
             F.col("group_id"),
             F.col(id_col).alias("id"),
             F.explode(tokenize_col(text)).alias("term"),
-        ).filter(F.col("term") != "")
-        parts.append(
-            toks.groupBy("channel", "group_id", "id", "term").agg(
-                F.count(F.lit(1)).alias("tf")
-            )
-        )
-    if not parts:
+        ))
+    if not toks:
         raise ValueError("no indexable graph tables present")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    union = toks[0]
+    for t in toks[1:]:
+        union = union.unionByName(t)
+    return (
+        union.filter(F.col("term") != "")
+        .groupBy("channel", "group_id", "id", "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
 
 
 def channel_index(

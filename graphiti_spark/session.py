@@ -10,6 +10,7 @@ runtime stats can re-plan shuffles/skew at scale.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -114,3 +115,18 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextmanager
+def job_description(spark: SparkSession, text: str):
+    """Label every Spark job started inside the block with ``text`` (the
+    event log's ``spark.job.description``), then restore the caller's
+    description. The job group is left alone, so callers that count or
+    cancel jobs by group are unaffected."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(text)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)

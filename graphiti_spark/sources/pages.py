@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, StringType, StructField, StructType
 
 from graphiti_spark import ids
+from graphiti_spark.schemas import DOCUMENTS_SCHEMA
 from graphiti_spark.textnorm import extract_text_udf, wrap_html
 
 # warc_ts derivation base (FIXTURES.md §1)
@@ -64,7 +65,11 @@ def _wrap_html_udf(doc_id: pd.Series, text: pd.Series) -> pd.Series:
 
 
 def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+    """documents.parquet with its known schema: a schema-less read
+    starts a Spark job to read the file footers on every load."""
+    return spark.read.schema(DOCUMENTS_SCHEMA).parquet(
+        f"{sf_dir}/documents.parquet"
+    )
 
 
 def load_pages(spark: SparkSession, sf_dir: str) -> DataFrame:

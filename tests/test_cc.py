@@ -70,9 +70,16 @@ def test_long_path_converges(spark):
 
 
 def test_empty_pairs(spark, monkeypatch):
+    """No pairs → an empty LOCAL mapping, so a caller's left join onto it
+    plans away (onto a Range(0) mapping it would run a broadcast job)."""
+    nodes = spark.range(3).select(F.col("id").cast("string").alias("uuid"))
     for gate in (cc.GATE, 0):
         monkeypatch.setattr(cc, "GATE", gate)
-        assert cc.connected_components(_pairs(spark, [])).count() == 0
+        mapping = cc.connected_components(_pairs(spark, []))
+        assert mapping.count() == 0
+        assert mapping.isLocal()
+        joined = nodes.join(F.broadcast(mapping), "uuid", "left")
+        assert "Join" not in joined._jdf.queryExecution().optimizedPlan().toString()
 
 
 # unpadded ids: string order ("n10" < "n9") differs from numeric order

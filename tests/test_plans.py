@@ -598,6 +598,79 @@ def test_saved_outputs_plan_over_stage_boundaries(spark):
     assert max(sizes.values()) < SAVED_PLAN_MAX_CHARS, sizes
 
 
+def _jobs_started(spark, fn) -> int:
+    """Spark jobs started while ``fn()`` runs (counted by job group)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_pages_starts_no_job(spark):
+    """documents.parquet is read with its schema: a schema-less read
+    starts a footer-reading job on every load."""
+    from graphiti_spark.sources.pages import load_pages
+
+    assert _jobs_started(spark, lambda: load_pages(spark, SF)) == 0
+
+
+def test_graph_postings_one_aggregation(spark):
+    """The channels' token streams share one aggregate, so the postings
+    plan has one hash exchange, not one per channel."""
+    from graphiti_spark.search.fulltext import build_graph_postings
+
+    def table(cols):
+        return spark.range(3).select(
+            *[F.concat(F.lit(f"{c} "), F.col("id").cast("string")).alias(c)
+              for c in cols]
+        )
+
+    postings = build_graph_postings({
+        "edges": table(["uuid", "group_id", "name", "fact"]),
+        "nodes": table(["uuid", "group_id", "name", "summary"]),
+        "episodes": table(["uuid", "group_id", "content"]),
+    })
+    plan = postings._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+
+
+# Jobs one build-and-save starts at sf0.001 on local[4] (measured 44, the
+# same on every run): a needless stage cut, count gate, broadcast of an
+# empty map or schema inference shows up here.
+BUILD_JOBS_MAX = 44
+
+
+def test_build_and_save_job_budget(spark, tmp_path):
+    from graphiti_spark.config import RunConfig
+    from graphiti_spark.materialize import save_graph
+    from graphiti_spark.pipeline import run_pipeline
+
+    def build():
+        save_graph(run_pipeline(spark, SF, RunConfig()), str(tmp_path))
+
+    assert _jobs_started(spark, build) <= BUILD_JOBS_MAX
+
+
+def test_job_description_restores_the_callers(spark):
+    from graphiti_spark.session import job_description
+
+    sc = spark.sparkContext
+    sc.setJobDescription("outer")
+    try:
+        with job_description(spark, "stage:x"):
+            assert sc.getLocalProperty("spark.job.description") == "stage:x"
+        assert sc.getLocalProperty("spark.job.description") == "outer"
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+
+
 @pytest.fixture(scope="module")
 def sf_entities(spark):
     """The sf0.001 entities, checkpointed the way run_pipeline cuts its
