@@ -184,20 +184,13 @@ def _q_edges_type_enforced(spark, sf_dir):
     """D19 on real pipeline output: every extracted predicate is a
     custom type; names not permitted for the (src_label, dst_label)
     pair reset to RELATES_TO."""
-    from graphiti_spark.config import (
-        BROADCAST_MAP_MAX_ROWS,
-        CUSTOM_EDGE_TYPES,
-        EDGE_TYPE_MAP,
-    )
+    from graphiti_spark.config import CUSTOM_EDGE_TYPES, EDGE_TYPE_MAP
     from graphiti_spark.operators.edge_dedup import enforce_edge_types
 
     out = _pipe(spark, sf_dir)
-    # measured-size broadcast gate, not bare AQE (CLAUDE.md: AQE's
-    # runtime conversion still materializes the planned map stage)
-    labels_small = out["nodes"].count() <= BROADCAST_MAP_MAX_ROWS
     enforced = enforce_edge_types(
         out["edges_merged"], out["nodes"], EDGE_TYPE_MAP,
-        set(CUSTOM_EDGE_TYPES), labels_are_small=labels_small,
+        set(CUSTOM_EDGE_TYPES),
     )
     return enforced.select(
         "uuid", "group_id", "source_node_uuid", "target_node_uuid", "name",

@@ -16,7 +16,7 @@ any change to it is a breaking change to the correctness contract.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from datetime import datetime, timezone
 
 # --- entity-resolution constants (reference dedup_helpers.py:31-36) ---
@@ -42,10 +42,6 @@ MAX_SUMMARY_CHARS = 500         # reference text_utils.py:20
 DEFAULT_EDGE_NAME = "RELATES_TO"  # reference edge_operations.py:46
 
 # --- this engine's additions ---
-# Size gate for broadcasting the canonical uuid_map (D15 remap joins):
-# rows measured at run time, NOT an unconditional hint — at web scale
-# the map is 10^8+ rows and must shuffle-join instead.
-BROADCAST_MAP_MAX_ROWS = 5_000_000
 EMBEDDING_DIM = 64              # deterministic feature-hash embedding dim
 EMBED_COSINE_THRESHOLD = 0.95   # D8' embedding fallback replacing LLM dedup
 N_SALT = 16                     # salt buckets for hub-entity skew mitigation
@@ -119,18 +115,9 @@ class RunConfig:
 
     run_ts: datetime = DEFAULT_RUN_TS
     run_id: str = "run-0"
-    embedding_dim: int = EMBEDDING_DIM
-    n_salt: int = N_SALT
-    fuzzy_jaccard_threshold: float = FUZZY_JACCARD_THRESHOLD
-    embed_cosine_threshold: float = EMBED_COSINE_THRESHOLD
     # E3: entity types whose mentions (and touching facts) are excluded
     # from the graph (reference excluded_entity_types). Empty = keep all.
     excluded_entity_types: tuple = ()
-    # T4 as the default edges output: close each edge at the earliest
-    # later valid_at among EITHER-endpoint sharers across predicates
-    # (reference truth table, edge_operations.py:406-441) instead of the
-    # narrower same-(subject, predicate) window only.
-    cross_predicate_invalidation: bool = True
     # G2-G4: build the communities/has_member tables as part of the
     # batch DAG (reference build_communities) so the incremental/
     # streaming ingest can MAINTAIN them per batch (reference
@@ -148,7 +135,6 @@ class RunConfig:
     # heavily-reused dedup subtree and let Catalyst fuse the big row
     # streams into deep jobs).
     persist_stages: bool | frozenset = True
-    extra: dict = field(default_factory=dict)
 
 
 # The small, reused subtree worth materializing in single-output batch runs:

@@ -682,6 +682,9 @@ def curate_docs(
         stages[stage] = ids
         return d.join(ids, "doc_id")
 
+    # Until the text is rewritten (step 4) each survivor-id set is a
+    # subset of the one before, so it joins straight onto ``docs``: the
+    # same rows as a chain of joins through every earlier stage.
     # 1. exact dedup
     d = keep("after_exact_dedup", docs, _canonical(exact_dedup(docs)))
 
@@ -691,7 +694,7 @@ def curate_docs(
     pairs = minhash_near_dup(
         d, threshold=near_dup_threshold, mode="word", dropped_sink=lsh_sink
     )
-    d = keep("after_near_dup", d, _canonical(canonical_docs(d, pairs)))
+    d = keep("after_near_dup", docs, _canonical(canonical_docs(d, pairs)))
 
     # 3. SemDeDup (Abbas et al. 2023): capped cells and the docs with no
     # embedding are returned, never silent
@@ -706,7 +709,7 @@ def curate_docs(
             max_cell=semantic_max_cell,
             dropped_sink=ivf_sink,
         )
-        d = keep("after_semantic_dedup", d, kept.select("doc_id"))
+        d = keep("after_semantic_dedup", docs, kept.select("doc_id"))
 
     # 4. corpus-level line dedup
     d = _rewritten(d, dedup_lines(d))

@@ -161,25 +161,24 @@ def enforce_edge_types(
     nodes: DataFrame,
     edge_type_map: dict[tuple[str, str], list[str]],
     custom_types: set[str] | None = None,
-    labels_are_small: bool | None = None,
 ) -> DataFrame:
     """D19: reset a CUSTOM edge name to RELATES_TO unless
     (src_label, dst_label) permits it; non-custom names pass through
     (reference edge_operations.py:575-613 — only names belonging to the
     user ontology are validated).
 
-    The labels side spans EVERY node, so its broadcast is SIZE-GATED like
-    resolve_edge_pointers (edges.py:125): callers pass ``labels_are_small``
-    from a measured count (config.BROADCAST_MAP_MAX_ROWS); None leaves the
-    decision to Catalyst statistics + AQE, which shuffle-joins on the
-    uniform sha256 uuid when the node table is large."""
+    The labels side spans EVERY node, so it follows edges.remap_uuids'
+    broadcast rule: hinted only when ``nodes`` is a local relation;
+    otherwise the decision is Catalyst statistics + AQE's, which
+    shuffle-join on the uniform sha256 uuid when the node table is
+    large."""
     custom = custom_types if custom_types is not None else {
         n for names in edge_type_map.values() for n in names
     }
     labels = nodes.select(
         "uuid", F.element_at("labels", -1).alias("label")
     )
-    blabels = F.broadcast(labels) if labels_are_small else labels
+    blabels = F.broadcast(labels) if nodes.isLocal() else labels
     with_labels = (
         edges.join(
             blabels.withColumnRenamed("uuid", "source_node_uuid")

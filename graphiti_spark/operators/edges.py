@@ -3,11 +3,15 @@
 
 Reference semantics:
   - resolve_edge_pointers (bulk_utils.py:541-548): rewrite src/dst uuids
-    through the canonical uuid_map → two left joins + coalesce.
+    through the canonical map → two left joins + coalesce.
   - edge exact-dup fast path (edge_operations.py:479-493): same endpoints
     + equal normalized fact → ONE edge, episode uuids unioned
     (tests/utils/maintenance/test_edge_operations.py:107-152).
   - deterministic edge identity: uuid = sha256(group|src|dst|pred|fact_norm).
+
+Every alias-map remap in the engine (edge endpoints, mention edges,
+nodes, the identity-padded uuid_map, the incremental batch) goes through
+``remap_uuids``, which alone decides the join's broadcast.
 
 Scale: the merge groupBy key includes fact_norm → high cardinality, no
 hub-entity hot key; map-side partial aggregation applies. episodes arrays
@@ -24,9 +28,37 @@ from graphiti_spark.functions.dedup_text import normalize_string_exact_col
 from graphiti_spark.functions.embed import make_embed_udf
 
 
-def edge_provenance_rows(
-    triples: DataFrame, uuid_map: DataFrame, map_is_small: bool | None = None
+def remap_uuids(
+    df: DataFrame, col: str, aliases: DataFrame, out: str | None = None
 ) -> DataFrame:
+    """``df`` with ``out`` (default: ``col`` itself) set to
+    coalesce(canonical_uuid, ``col``): a left join of the alias map
+    (uuid, canonical_uuid) on ``col``, so a uuid missing from the map
+    maps to itself. The map may be CC's aliases or any identity-padded
+    uuid_map; both give the same rows.
+
+    The map is broadcast exactly when it is a local relation. CC's
+    driver regime returns one of at most cc.GATE rows, sized by its own
+    bounded collect, so no count job decides the strategy; an empty one
+    plans the join away. Any other map (CC's distributed regime, a
+    loaded table; at web scale 10^8+ rows) is left to Catalyst
+    statistics + AQE, which shuffle-join on the uniform sha256 uuid (no
+    hot key). The hint matters on short pipelines: AQE's runtime
+    conversion still pays the map stage of the planned shuffle.
+    Asserted both ways in tests/test_alias_remap.py."""
+    canon = aliases.select(
+        F.col("uuid").alias(col), F.col("canonical_uuid").alias("__canon")
+    )
+    if aliases.isLocal():
+        canon = F.broadcast(canon)
+    return (
+        df.join(canon, col, "left")
+        .withColumn(out or col, F.coalesce("__canon", col))
+        .drop("__canon")
+    )
+
+
+def edge_provenance_rows(triples: DataFrame, uuid_map: DataFrame) -> DataFrame:
     """Pre-aggregation edge rows, one per (triple, provenance episode):
     (group_id, source_node_uuid, target_node_uuid, name, fact, fact_norm,
     episode_uuid, ep_valid_at). Endpoints are canonicalized through
@@ -47,8 +79,7 @@ def edge_provenance_rows(
         ).alias("dst_raw"),
     )
     remapped = resolve_edge_pointers(
-        with_ids, uuid_map, src="src_raw", dst="dst_raw",
-        map_is_small=map_is_small,
+        with_ids, uuid_map, src="src_raw", dst="dst_raw"
     )
     return remapped.select(
         "group_id",
@@ -109,67 +140,27 @@ def merge_edge_rows(rows: DataFrame, run_ts) -> DataFrame:
 
 
 def triples_to_edges(
-    triples: DataFrame, uuid_map: DataFrame, run_ts,
-    map_is_small: bool | None = None,
+    triples: DataFrame, uuid_map: DataFrame, run_ts
 ) -> DataFrame:
     """Extracted triples + canonical uuid_map → merged canonical edges.
 
     triples: (episode_uuid, group_id, valid_at, subj_name, pred, obj_name, fact)
     uuid_map: (uuid, canonical_uuid)
     """
-    return merge_edge_rows(
-        edge_provenance_rows(triples, uuid_map, map_is_small), run_ts
-    )
+    return merge_edge_rows(edge_provenance_rows(triples, uuid_map), run_ts)
 
 
 def resolve_edge_pointers(
     edges: DataFrame, uuid_map: DataFrame, src: str = "source_node_uuid",
-    dst: str = "target_node_uuid", map_is_small: bool | None = None,
+    dst: str = "target_node_uuid",
 ) -> DataFrame:
-    """Rewrite edge endpoints through the canonical map (D15): two left
-    joins + coalesce(canonical, original).
-
-    Broadcast is SIZE-GATED, never unconditional: at web scale the map
-    exceeds driver memory. The batch pipeline remaps through CC's alias
-    map and passes ``map_is_small`` when CC's bounded collect took the
-    driver regime (at most cc.GATE rows, no count job); the incremental
-    path passes it from its delta map's row count
-    (config.BROADCAST_MAP_MAX_ROWS). Without that knowledge (None) the
-    decision is left to Catalyst statistics + AQE, which falls back to
-    shuffle joins keyed on the endpoint uuid (uniform sha256 — no hot
-    key). Asserted both ways in tests/test_plans.py. The explicit hint
-    matters on short pipelines: AQE's runtime conversion still pays the
-    map-stage materialization of the planned shuffle."""
-    bmap = F.broadcast(uuid_map) if map_is_small else uuid_map
-
-    out = (
-        edges.join(
-            bmap.select(
-                F.col("uuid").alias(src), F.col("canonical_uuid").alias("__src_canon")
-            ),
-            src,
-            "left",
-        )
-        .withColumn(src, F.coalesce("__src_canon", src))
-        .drop("__src_canon")
-    )
-    out = (
-        out.join(
-            bmap.select(
-                F.col("uuid").alias(dst), F.col("canonical_uuid").alias("__dst_canon")
-            ),
-            dst,
-            "left",
-        )
-        .withColumn(dst, F.coalesce("__dst_canon", dst))
-        .drop("__dst_canon")
-    )
-    return out
+    """Rewrite edge endpoints through the canonical map (D15): one
+    remap_uuids per endpoint."""
+    return remap_uuids(remap_uuids(edges, src, uuid_map), dst, uuid_map)
 
 
 def build_mention_edges(
-    mentions: DataFrame, uuid_map: DataFrame, run_ts,
-    map_is_small: bool | None = None,
+    mentions: DataFrame, uuid_map: DataFrame, run_ts
 ) -> DataFrame:
     """MENTIONS episodic edges (reference edge_operations.py:51-68):
     (episode → canonical entity), distinct, deterministic uuids."""
@@ -178,26 +169,18 @@ def build_mention_edges(
         "group_id",
         ids.entity_uuid_col(
             F.col("group_id"), normalize_string_exact_col(F.col("name"))
-        ).alias("entity_raw"),
+        ).alias("entity_uuid"),
     )
-    bmap = F.broadcast(uuid_map) if map_is_small else uuid_map
-    remapped = (
-        with_entity.join(
-            bmap.select(
-                F.col("uuid").alias("entity_raw"),
-                F.col("canonical_uuid").alias("entity_uuid"),
-            ),
-            "entity_raw",
-            "left",
-        )
-        .select(
-            "episode_uuid",
-            "group_id",
-            F.coalesce("entity_uuid", "entity_raw").alias("entity_uuid"),
-        )
-        .distinct()
+    return rebuild_mention_edges(
+        remap_uuids(with_entity, "entity_uuid", uuid_map), run_ts
     )
-    return remapped.select(
+
+
+def rebuild_mention_edges(pairs: DataFrame, run_ts) -> DataFrame:
+    """(episode_uuid, group_id, entity_uuid) rows → MENTIONS edges,
+    distinct, with recomputed deterministic uuids."""
+    distinct = pairs.select("episode_uuid", "group_id", "entity_uuid").distinct()
+    return distinct.select(
         ids.mention_uuid_col(F.col("episode_uuid"), F.col("entity_uuid")).alias("uuid"),
         "group_id",
         "episode_uuid",

@@ -18,8 +18,13 @@ DELTA ALGEBRA — what a batch can possibly change:
   components  a prior component changes iff a seed touches it; the
               affected alias set A = prior_map rows whose canonical is a
               seed's prior canonical. CC re-runs over A's pairs + the
-              delta pairs ONLY (delta_map); everything else keeps its
-              prior mapping verbatim.
+              delta pairs ONLY; everything else keeps its prior mapping
+              verbatim. Every remap below reads CC's alias map through
+              edges.remap_uuids, exactly as the batch build does (a
+              local map broadcasts, an empty one plans away, no count
+              job); the identity-padded delta_map over A ∪ new uuids
+              feeds the map diff, the node/community deltas and the
+              uuid_map upserts.
   edges       a prior edge is touched iff (a) an endpoint is a
               re-pointed canonical, or (b) its merge key collides with a
               new-batch row or a re-pointed edge's new key (episode
@@ -66,9 +71,12 @@ from pyspark.sql import functions as F
 
 from graphiti_spark import ids
 from graphiti_spark.config import RunConfig
+from graphiti_spark.operators.cc import connected_components
 from graphiti_spark.operators.edges import (
+    build_mention_edges,
     edge_provenance_rows,
     merge_edge_rows,
+    rebuild_mention_edges,
     resolve_edge_pointers,
 )
 from graphiti_spark.operators.resolve import (
@@ -76,6 +84,7 @@ from graphiti_spark.operators.resolve import (
     duplicate_pairs,
     duplicate_pairs_between,
     extracted_entities,
+    full_uuid_map,
 )
 from graphiti_spark.sources.pages import pages_to_episodes
 
@@ -145,7 +154,6 @@ def prior_edge_provenance_rows(
     prior_edges: DataFrame,
     prior_episodes: DataFrame,
     uuid_map: DataFrame,
-    map_is_small: bool | None = None,
 ) -> DataFrame:
     """Explode persisted edges back to provenance rows (the
     merge_edge_rows exchange format), re-canonicalizing endpoints through
@@ -176,7 +184,7 @@ def prior_edge_provenance_rows(
         ),
         "episode_uuid",
     )
-    remapped = resolve_edge_pointers(with_ts, uuid_map, map_is_small=map_is_small)
+    remapped = resolve_edge_pointers(with_ts, uuid_map)
     from graphiti_spark.functions.dedup_text import normalize_string_exact_col
 
     return remapped.select(
@@ -188,20 +196,6 @@ def prior_edge_provenance_rows(
         normalize_string_exact_col(F.col("fact")).alias("fact_norm"),
         "episode_uuid",
         "ep_valid_at",
-    )
-
-
-def rebuild_mention_edges(pairs: DataFrame, run_ts) -> DataFrame:
-    """(episode_uuid, group_id, entity_uuid) pairs → MENTIONS edges with
-    recomputed deterministic uuids."""
-    return pairs.distinct().select(
-        ids.mention_uuid_col(F.col("episode_uuid"), F.col("entity_uuid")).alias(
-            "uuid"
-        ),
-        "group_id",
-        "episode_uuid",
-        "entity_uuid",
-        F.lit(run_ts).alias("created_at"),
     )
 
 
@@ -509,7 +503,9 @@ def ingest_incremental(
     )
 
     episodes_new = pages_to_episodes(new_pages, cfg.run_ts).localCheckpoint()
-    stream_new = extract_token_stream(episodes_new).localCheckpoint()
+    stream_new = extract_token_stream(
+        episodes_new, cfg.excluded_entity_types
+    ).localCheckpoint()
     mentions_new = mentions_from_stream(stream_new)
     triples_new = triples_from_stream(stream_new)
     return ingest_extracted(
@@ -590,14 +586,13 @@ def ingest_extracted(
     touched_pairs = prior_pairs.join(
         local_uuids.withColumnRenamed("uuid", "src"), "src", "left_semi"
     )
-    delta_map = canonical_uuid_map(
-        local_uuids, touched_pairs.unionByName(pairs_delta).distinct()
-    ).localCheckpoint()
-
-    from graphiti_spark.config import BROADCAST_MAP_MAX_ROWS
-
-    map_small = delta_map.count() <= BROADCAST_MAP_MAX_ROWS
-    bdelta = F.broadcast(delta_map) if map_small else delta_map
+    # every remap reads CC's alias map, as the batch build does (a uuid
+    # outside it maps to itself); the identity-padded delta_map is kept
+    # for the map diff, the node and community deltas and the upserts
+    aliases = connected_components(
+        touched_pairs.unionByName(pairs_delta).distinct()
+    )
+    delta_map = full_uuid_map(local_uuids, aliases).localCheckpoint()
 
     # prior canonicals re-pointed by the merge (identity rows whose
     # canonical moved — exactly the endpoints prior edges reference)
@@ -618,9 +613,7 @@ def ingest_extracted(
     )
 
     # --- touched prior edges (repoint ∪ key collision) ---
-    rows_new = edge_provenance_rows(
-        triples_new, delta_map, map_small
-    ).localCheckpoint()
+    rows_new = edge_provenance_rows(triples_new, aliases).localCheckpoint()
     new_keys = rows_new.select(_edge_uuid_from_key().alias("uuid")).distinct()
 
     rp_src = repoint.select(F.col("uuid").alias("source_node_uuid"))
@@ -651,8 +644,7 @@ def ingest_extracted(
                 "group_id", "source_node_uuid", "target_node_uuid", "name",
                 normalize_string_exact_col(F.col("fact")).alias("fact_norm"),
             ),
-            delta_map,
-            map_is_small=map_small,
+            aliases,
         )
         .select(_edge_uuid_from_key().alias("uuid"))
         .distinct()
@@ -669,7 +661,7 @@ def ingest_extracted(
 
     # --- merge: new rows + touched prior provenance only ---
     rows_touched = prior_edge_provenance_rows(
-        touched_prior, prior["episodes"], delta_map, map_small
+        touched_prior, prior["episodes"], aliases
     )
     recomputed = merge_edge_rows(
         rows_new.unionByName(rows_touched), run_ts
@@ -679,15 +671,9 @@ def ingest_extracted(
     edges_merged = untouched_prior.select(*merged_cols).unionByName(recomputed)
 
     # --- temporal: recompute closings only around changed instants ---
-    if cfg.cross_predicate_invalidation:
-        edges, edges_changed = _invalidate_delta(
-            untouched_prior, recomputed, touched_prior, run_ts
-        )
-    else:
-        from graphiti_spark.operators.temporal import invalidate_edges
-
-        edges = invalidate_edges(edges_merged, run_ts)
-        edges_changed = edges  # no delta bound without the skyline form
+    edges, edges_changed = _invalidate_delta(
+        untouched_prior, recomputed, touched_prior, run_ts
+    )
 
     # --- nodes: rebuild only affected canonicals ---
     affected_canon = (
@@ -708,34 +694,14 @@ def ingest_extracted(
         "left_semi",
     )
     nodes_delta = build_nodes(
-        entities_restricted, delta_map, edges_for_nodes, run_ts,
-        map_is_small=map_small,
+        entities_restricted, aliases, edges_for_nodes, run_ts
     )
     prior_nodes = prior["nodes"]
     nodes_untouched = prior_nodes.join(affected_canon, "uuid", "left_anti")
     nodes = nodes_untouched.select(*nodes_delta.columns).unionByName(nodes_delta)
 
     # --- mentions: remap only re-pointed canonicals ---
-    new_mention_pairs = mentions_new.select(
-        "episode_uuid",
-        "group_id",
-        ids.entity_uuid_col(
-            F.col("group_id"),
-            normalize_string_exact_col(F.col("name")),
-        ).alias("entity_uuid"),
-    ).join(
-        bdelta.select(
-            F.col("uuid").alias("entity_uuid"),
-            F.col("canonical_uuid").alias("canon"),
-        ),
-        "entity_uuid",
-        "left",
-    ).select(
-        "episode_uuid",
-        "group_id",
-        F.coalesce("canon", "entity_uuid").alias("entity_uuid"),
-    )
-    me_new = rebuild_mention_edges(new_mention_pairs, run_ts)
+    me_new = build_mention_edges(mentions_new, aliases, run_ts)
 
     prior_me = prior["mention_edges"]
     me_touched = prior_me.join(

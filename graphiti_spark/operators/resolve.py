@@ -56,6 +56,7 @@ from graphiti_spark.functions.dedup_text import (
 )
 from graphiti_spark.functions.embed import cosine_col, make_embed_udf
 from graphiti_spark.operators.blocking import blocked_pairs, capped_groups
+from graphiti_spark.operators.edges import remap_uuids
 
 # Guard against pathological LSH buckets (all-identical band values).
 MAX_BUCKET_SIZE = 1000
@@ -243,6 +244,4 @@ def canonical_uuid_map(entities: DataFrame, pairs: DataFrame) -> DataFrame:
 def full_uuid_map(entities: DataFrame, aliases: DataFrame) -> DataFrame:
     """CC's alias map (uuid → canonical_uuid for the uuids in a pair)
     padded with an identity row for every other entity."""
-    return entities.select("uuid").join(aliases, "uuid", "left").select(
-        "uuid", F.coalesce("canonical_uuid", "uuid").alias("canonical_uuid")
-    )
+    return remap_uuids(entities.select("uuid"), "uuid", aliases, out="canonical_uuid")

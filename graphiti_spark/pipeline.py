@@ -40,6 +40,7 @@ from graphiti_spark.functions.embed import make_embed_udf
 from graphiti_spark.lineage import materialize_stage
 from graphiti_spark.operators.edges import (
     build_mention_edges,
+    remap_uuids,
     triples_to_edges,
 )
 from graphiti_spark.operators.cc import connected_components
@@ -48,7 +49,7 @@ from graphiti_spark.operators.resolve import (
     extracted_entities,
     full_uuid_map,
 )
-from graphiti_spark.operators.temporal import invalidate_edges
+from graphiti_spark.operators.temporal import invalidate_cross_predicate
 from graphiti_spark.functions.typing import labels_col
 from graphiti_spark.session import job_description
 from graphiti_spark.sources.pages import load_pages, pages_to_episodes
@@ -63,7 +64,6 @@ def build_nodes(
     edges: DataFrame,
     run_ts,
     n_salt: int = None,
-    map_is_small: bool | None = None,
 ) -> DataFrame:
     """Canonical EntityNode table (E8 summary + E9 embeddings).
 
@@ -77,16 +77,7 @@ def build_nodes(
     :544-573 replaced per SURVEY.md E8). Nodes without facts summarize to
     their own name.
     """
-    # Size-gated broadcast (see resolve_edge_pointers): the pipeline
-    # passes map_is_small when CC's bounded collect took the driver
-    # regime (a map of at most cc.GATE rows), not from a count job;
-    # above the gate it passes None, and at web scale this stays a
-    # shuffle join on uuid (uniform sha256 key, no hot key).
-    bmap = F.broadcast(uuid_map) if map_is_small else uuid_map
-    remapped = (
-        entities.join(bmap, "uuid", "left")
-        .withColumn("canonical_uuid", F.coalesce("canonical_uuid", "uuid"))
-    )
+    remapped = remap_uuids(entities, "uuid", uuid_map, out="canonical_uuid")
     canonical = (
         remapped.groupBy("group_id", "canonical_uuid")
         .agg(
@@ -252,53 +243,39 @@ def run_pipeline_from_pages(
         )
     )
     # D13/D14: CC's alias map holds only the uuids that are in a pair.
-    # Every remap below coalesces a missing uuid to itself, so it gives
-    # the rows the identity-padded uuid_map would; that map is built
-    # lazily, for the caller only. CC's driver regime returns a local
-    # relation of at most cc.GATE rows (sized by its own bounded
-    # collect), so the remap joins broadcast it without a count job;
-    # above the gate the planner decides (None). An empty alias map
-    # plans the joins away.
+    # Every remap below (edges.remap_uuids) coalesces a missing uuid to
+    # itself, so it gives the rows the identity-padded uuid_map would;
+    # that map is built lazily, for the caller only. CC's driver regime
+    # returns a local relation, which the remaps broadcast; an empty
+    # alias map plans the joins away.
     with job_description(spark, "cc"):
         aliases = connected_components(pairs)
-    map_small = True if aliases.isLocal() else None
     uuid_map = stage(
         "uuid_map", lambda: full_uuid_map(entities, aliases), reread=False
     )
 
     edges_merged = stage(
         "edges_merged",
-        lambda: triples_to_edges(
-            triples, aliases, cfg.run_ts, map_is_small=map_small
-        ),
+        lambda: triples_to_edges(triples, aliases, cfg.run_ts),
         partition_by=["group_id"] if ckpt else None,
     )
-    # Default T1-T4 semantics: the cross-predicate either-endpoint closing
+    # T1-T4 semantics: the cross-predicate either-endpoint closing
     # SUBSUMES the same-(group, subject, predicate) window — that
     # partition shares the subject endpoint, so its successor instant is
     # never earlier than the endpoint skyline's (invalidate_cross_predicate
     # docstring; equality pinned by test_temporal_t4).
-    def _edges():
-        if cfg.cross_predicate_invalidation:
-            from graphiti_spark.operators.temporal import (
-                invalidate_cross_predicate,
-            )
-
-            return invalidate_cross_predicate(edges_merged, cfg.run_ts)
-        return invalidate_edges(edges_merged, cfg.run_ts)
-
-    edges = stage("edges", _edges, reread=False)
+    edges = stage(
+        "edges",
+        lambda: invalidate_cross_predicate(edges_merged, cfg.run_ts),
+        reread=False,
+    )
     nodes = stage(
         "nodes",
-        lambda: build_nodes(
-            entities, aliases, edges_merged, cfg.run_ts, map_is_small=map_small
-        ),
+        lambda: build_nodes(entities, aliases, edges_merged, cfg.run_ts),
     )
     mention_edges = stage(
         "mention_edges",
-        lambda: build_mention_edges(
-            mentions, aliases, cfg.run_ts, map_is_small=map_small
-        ),
+        lambda: build_mention_edges(mentions, aliases, cfg.run_ts),
         reread=False,
     )
 

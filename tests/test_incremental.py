@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from graphiti_spark.config import RunConfig
+from graphiti_spark.config import NOUN_ENTITY_TYPES, RunConfig
 from graphiti_spark.operators.incremental import (
     get_relevant_edges,
     get_relevant_nodes,
@@ -137,6 +137,30 @@ def test_incremental_equals_batch_with_dated_content(spark):
     want_prov = {(r.uuid, tuple(r.episodes)) for r in
                  full["edges_merged"].select("uuid", "episodes").collect()}
     assert got_prov == want_prov
+    pages.unpersist()
+
+
+def test_incremental_honors_excluded_entity_types(spark):
+    """E3 exclusion on the incremental path: with System-typed mentions
+    excluded, batch A then batch B hash-equals one batch over A ∪ B
+    (the associativity contract holds under RunConfig's exclusion)."""
+    from scripts.verify_oracle import frame_hash
+
+    cfg = RunConfig(excluded_entity_types=("System",))
+    pages = load_pages(spark, SF).persist()
+    odd = F.col("doc_id") % 2 == 1
+    out_a = run_pipeline_from_pages(spark, pages.filter(~odd), cfg)
+    merged = ingest_incremental(spark, pages.filter(odd), out_a, cfg)
+    full = run_pipeline_from_pages(spark, pages, cfg)
+    # batch B names System-typed nouns, so the exclusion matters there
+    system_nouns = sorted(n for n, t in NOUN_ENTITY_TYPES.items() if t == "System")
+    system_re = r"\b(" + "|".join(system_nouns) + r")\b"
+    assert pages.filter(odd & F.col("text").rlike(system_re)).count() > 0
+    for name in ("edges", "nodes", "mention_edges"):
+        got, want = merged[name].collect(), full[name].collect()
+        assert len(got) == len(want), name
+        assert frame_hash(merged[name].columns, [tuple(r) for r in got]) == \
+            frame_hash(full[name].columns, [tuple(r) for r in want]), name
     pages.unpersist()
 
 

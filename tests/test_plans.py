@@ -301,7 +301,9 @@ def _no_broadcast(conf):
     }
 
 
-def _type_frames(spark, labels_are_small):
+def _type_frames(spark, local_nodes):
+    import pyarrow as pa
+
     from graphiti_spark.operators.edge_dedup import enforce_edge_types
 
     edges = spark.range(100).select(
@@ -309,35 +311,44 @@ def _type_frames(spark, labels_are_small):
         F.col("id").cast("string").alias("target_node_uuid"),
         F.lit("JOIN").alias("name"),
     )
-    nodes = spark.range(100).select(
-        F.col("id").cast("string").alias("uuid"),
-        F.array(F.lit("Entity"), F.lit("Person")).alias("labels"),
-    )
-    return enforce_edge_types(
-        edges, nodes, {("Person", "Person"): ["JOIN"]},
-        labels_are_small=labels_are_small,
-    )
+    if local_nodes:
+        ids = [str(i) for i in range(100)]
+        nodes = spark.createDataFrame(pa.table({
+            "uuid": ids,
+            "labels": [["Entity", "Person"]] * len(ids),
+        }))
+        assert nodes.isLocal()
+    else:
+        nodes = spark.range(100).select(
+            F.col("id").cast("string").alias("uuid"),
+            F.array(F.lit("Entity"), F.lit("Person")).alias("labels"),
+        )
+        assert not nodes.isLocal()
+    return enforce_edge_types(edges, nodes, {("Person", "Person"): ["JOIN"]})
 
 
 def test_enforce_edge_types_broadcasts_when_small(spark):
-    """D19 label joins broadcast when the caller has MEASURED the node
-    table small (same gate as the D15 remap joins)."""
-    plan = _plan(_type_frames(spark, labels_are_small=True))
-    assert "BroadcastHashJoin" in plan
+    """D19 label joins follow the uuid remap's broadcast rule: a LOCAL
+    node table (a driver-sized relation) is hinted."""
+    out = _type_frames(spark, local_nodes=True)
+    assert "strategy=broadcast" in _plan(out)
+    assert "BroadcastHashJoin" in _plan(out)
 
 
 def test_enforce_edge_types_survives_large_labels(spark):
-    """With broadcasting disabled (stand-in for a web-scale nodes table)
-    the D19 label joins must complete as shuffle joins — the labels side
-    spans EVERY node and a forced broadcast would OOM the driver."""
+    """A non-local node table (stand-in for a web-scale one) is never
+    hinted: with broadcasting disabled the D19 label joins complete as
+    shuffle joins — the labels side spans EVERY node and a forced
+    broadcast would OOM the driver."""
     conf = spark.conf
     saved = {k: conf.get(k, None) for k in _no_broadcast(conf)}
     try:
         for k, v in _no_broadcast(conf).items():
             conf.set(k, v)
-        out = _type_frames(spark, labels_are_small=None)
+        out = _type_frames(spark, local_nodes=False)
         assert out.count() == 100  # completes
         plan = _plan(out)
+        assert "strategy=broadcast" not in plan
         assert "BroadcastHashJoin" not in plan
     finally:
         for k, v in saved.items():
